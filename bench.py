@@ -212,9 +212,9 @@ def main() -> None:
     # invisible in the compact line — r17's driver window degraded 4×
     # and the per-query numbers could not be machine-flagged. Both
     # readings now ship in the line; a large start/end gap marks the
-    # window as throttled. Additions-only: the existing
-    # calib_numpy_s (= end reading) keeps its meaning for cross-round
-    # diffs.
+    # window as throttled. calib_numpy_s is the end reading (its
+    # meaning is unchanged for cross-round diffs), so the line carries
+    # no separate calib_end.
     calib_start = host_calib()
 
     spark = get_spark("etl-project-spark-bench")
@@ -317,7 +317,6 @@ def main() -> None:
         "steady_total": detail["steady_state"]["value"],
         "calib_numpy_s": detail["host_calib"]["numpy_matmul_s"],
         "calib_start": calib_start["numpy_matmul_s"],
-        "calib_end": detail["host_calib"]["numpy_matmul_s"],
         "sf": detail["sf"],
     }
     line = json.dumps(compact, separators=(",", ":"))

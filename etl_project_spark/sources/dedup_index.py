@@ -14,8 +14,9 @@ economics as the PQ/IVF layer (:mod:`etl_project_spark.sources.ann_index`).
 Mechanism mirrors ``ann_index``: ``persist_gram_index`` /
 ``persist_simhash_index`` build the frame once with THE shared builder
 (so served and inflight rows are definitionally identical), write it to
-parquet, and register the layout in a process-local map keyed by the
-corpus dir + build parameters. Consumers (the batch incremental plan,
+parquet, and register the handle in one process-local map keyed by
+(family, corpus dir); a lookup serves it only when its build parameters
+match. Consumers (the batch incremental plan,
 or a caller wiring up the streaming twins) ask ``*_index_for`` and fall
 back to the inflight builder when nothing matches. Registration is an
 explicit session opt-in, so the driver's correctness runs (no
@@ -26,20 +27,28 @@ A parameter mismatch means "no index", never "close enough": grams
 hashed at a different ``n`` (or postings built for a different Hamming
 budget / block split) are not an answer, they are a wrong answer.
 
-In production both tables would be bucketed by their join key (``_g``;
+Every persisted frame of the four families is one :class:`IndexTable`
+— the single owner of write, append, read, retract and compact. The
+MinHash gram rows and the nkey ledger are key-bucketed external tables
+(``_id``; ``nkey``), so their key-clustered consumers run
+exchange-free. The gram and SimHash postings are still plain parquet;
+in production they too would be bucketed by their join key (``_g``;
 ``(_cmask, _key)``) so the per-batch probe join is shuffle-free on the
-history side — the plumbing here keeps plain parquet (the bucketed
-layout registry in :mod:`etl_project_spark.sources.bucketed` shows the
-bucketed variant of the same pattern).
+history side.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 import tempfile
+import urllib.parse
+import urllib.request
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 #: The history predicate of the incremental topology: everything that
 #: is not the arriving batch. One definition shared by the persist
@@ -48,29 +57,219 @@ from pyspark.sql import DataFrame, SparkSession
 BATCH_SOURCE = "src19"
 
 
-class GramIndex:
-    """Handle for one persisted gram inverted index.
+def _index_table_name(path: str) -> str:
+    """Catalog name for an index table: per-(pid, path-digest) so two
+    processes sharing a warehouse can never cross-wire each other's
+    builds (the query_scoped_index_dir race note, catalog edition) and
+    repeat builds in one session resolve to the same name (the
+    overwrite path drops + recreates it)."""
+    tag = hashlib.sha1(os.path.abspath(path).encode()).hexdigest()[:8]
+    return f"idx_{os.getpid()}_{tag}"
 
-    ``owns_path``: True when the module allocated the temp directory
-    itself (caller passed ``path=None``) — such directories are deleted
-    when the registry entry is replaced or cleared, so repeat rebuilds
-    in a long-lived session cannot accumulate orphaned parquet dirs.
-    Caller-supplied paths are never deleted (the caller owns them).
+
+class IndexTable:
+    """One persisted index frame: a parquet directory ``path``, plain
+    when ``key`` is None, else an EXTERNAL table ``table`` bucketed on
+    ``key`` into ``n_buckets`` at that location.
+
+    Bucketing is the pay-once shuffle that makes every later
+    ``key``-clustered consumer (groupBy/dropDuplicates/equi-join on
+    ``key``) exchange-free (guide §2.4; the sources/bucketed.py
+    pattern, pointed at an explicit location so the per-(pid, corpus)
+    temp-dir isolation contract is unchanged). The bucket count only
+    affects layout, never results: a session whose catalog does not
+    know the table reads (and appends to) the same directory as plain
+    parquet — identical rows, just re-clustered per consumer.
     """
 
-    __slots__ = ("path", "n", "owns_path")
+    __slots__ = ("path", "key", "n_buckets", "table")
 
-    def __init__(self, path: str, n: int, owns_path: bool = False) -> None:
+    def __init__(self, path: str, key: str | None = None, n_buckets: int = 0) -> None:
         self.path = path
-        self.n = n
+        self.key = key
+        self.n_buckets = n_buckets
+        self.table = None if key is None else _index_table_name(path)
+
+    def write(self, df: DataFrame, *, mode: str = "overwrite") -> None:
+        """Write ``df`` in this table's layout (``mode="overwrite"``
+        replaces directory and catalog entry; ``"append"`` requires the
+        bucketed table to exist with the same spec, which holds because
+        the spec lives on this one object).
+
+        No ``sortBy``: every consumer of these frames is a hash aggregate
+        or hash join on ``key`` — nothing needs ordered runs, and the
+        per-task sort was measurable build cost at bench scale for zero
+        read benefit. No repartition either: the build/append input is
+        already hash(key)-clustered by the signing pipeline (the
+        bucketed write is CORRECT under any input partitioning —
+        misalignment only costs extra files per bucket, which
+        compaction folds)."""
+        if self.key is None:
+            df.write.mode(mode).parquet(self.path)
+            return
+        writer = (
+            df.write.format("parquet").mode(mode).bucketBy(self.n_buckets, self.key)
+        )
+        if mode == "overwrite":
+            df.sparkSession.sql(f"DROP TABLE IF EXISTS {self.table}")
+            shutil.rmtree(self.path, ignore_errors=True)
+            writer = writer.option("path", self.path)
+        writer.saveAsTable(self.table)
+
+    def _cataloged(self, spark: SparkSession) -> bool:
+        """Whether this session's catalog knows the bucketed table, its
+        file listing refreshed. The refresh is load-bearing:
+        appends/deletes/compactions mutate the table's FILES (possibly
+        from a foreachBatch-cloned session or via directory swaps), and
+        a session that scanned the table earlier holds a cached file
+        listing that would silently serve the pre-mutation snapshot
+        (measured: a streamed append was invisible to the builder
+        session until refreshed). Cheap local re-list here; a manifest
+        table format does this bookkeeping transactionally at scale."""
+        if self.table is None or not spark.catalog.tableExists(self.table):
+            return False
+        spark.catalog.refreshTable(self.table)
+        return True
+
+    def append(self, df: DataFrame) -> None:
+        """Append ``df`` into the SAME bucket spec when the catalog
+        knows the table, so the grown table keeps its exchange-free
+        scan (each append adds one file per bucket; :meth:`compact`
+        folds them); else a plain parquet append into the directory."""
+        target = self if self._cataloged(df.sparkSession) else IndexTable(self.path)
+        target.write(df, mode="append")
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        """The frame, through the bucketed table when this session's
+        catalog knows it, else plain parquet."""
+        if self._cataloged(spark):
+            return spark.table(self.table)
+        return spark.read.parquet(self.path)
+
+    def _stage(self, df: DataFrame, staging: str, n_buckets: int) -> None:
+        """Write ``df`` to the sibling directory ``staging`` in this
+        table's layout at ``n_buckets``, leaving no catalog entry
+        behind: moved-in bucketed part-files must carry valid bucket-id
+        suffixes (a plain staging write would strip the bucket mapping
+        and silently corrupt every clustered read). The maintenance
+        inputs arrive arbitrarily partitioned, so a bucketed stage is
+        repartitioned on ``key`` first to land one file per bucket."""
+        stg = IndexTable(staging, self.key, n_buckets)
+        if stg.table is None:
+            stg.write(df)
+            return
+        stg.write(df.repartition(n_buckets, self.key))
+        df.sparkSession.sql(f"DROP TABLE IF EXISTS {stg.table}")
+
+    def retract_ids(self, spark: SparkSession, tombstone_ids: DataFrame) -> None:
+        """Rewrite the part-files holding a tombstoned ``_id`` without
+        those rows (see :func:`_affected_index_files`); every other file
+        is left untouched. Survivors are staged to a sibling dir, moved
+        in, and only then are the originals removed.
+
+        That order makes the crash window's failure state benign
+        DUPLICATES (survivor rows present twice until the originals go),
+        which every consumer collapses (``dropDuplicates`` on gram rows;
+        banded/candidate ``distinct()`` over signature rows) — never
+        missing rows, which the delete-first order would risk. Same
+        single-writer exactly-once seam as the appends; on a real object
+        store this is one atomic manifest swap (Delta/Iceberg
+        rewrite-and-commit). Bucketed survivors re-hash into exactly
+        their original buckets (same murmur3, same count), so merging
+        them back is layout-exact."""
+        files = _affected_index_files(spark, self.path, tombstone_ids)
+        if not files:
+            return
+        staging = self.path.rstrip("/") + ".staging_delete"
+        survivors = spark.read.parquet(*files).join(
+            tombstone_ids.select("_id"), "_id", "left_anti"
+        )
+        self._stage(survivors, staging, self.n_buckets)
+        for name in os.listdir(staging):
+            if name.startswith("part-"):
+                # staged part names carry Spark's per-job UUID, so moving
+                # them in cannot collide with existing part-files
+                shutil.move(
+                    os.path.join(staging, name), os.path.join(self.path, name)
+                )
+        for f in files:
+            try:
+                os.remove(urllib.request.url2pathname(urllib.parse.urlparse(f).path))
+            except FileNotFoundError:
+                pass
+        shutil.rmtree(staging, ignore_errors=True)
+
+    def compact(
+        self, spark: SparkSession, fold: Callable[[DataFrame], DataFrame], n: int
+    ) -> None:
+        """Rewrite the whole frame as ``fold(frame)`` in ``n`` files (one
+        per bucket when bucketed), staged and atomically swapped in
+        (``os.rename`` of the directory — the manifest-commit seam the
+        append docstrings name; on an object store this is the
+        Delta/Iceberg OPTIMIZE + snapshot swap, since object stores have
+        no atomic rename). A bucketed table is then re-registered at
+        ``n`` buckets, so the compacted frame keeps the exchange-free
+        scan; the count only affects layout."""
+        staging = self.path.rstrip("/") + ".staging_compact"
+        old = self.path.rstrip("/") + ".pre_compact"
+        shutil.rmtree(old, ignore_errors=True)
+        folded = fold(spark.read.parquet(self.path))
+        self._stage(folded.coalesce(n) if self.key is None else folded, staging, n)
+        os.rename(self.path, old)
+        os.rename(staging, self.path)
+        shutil.rmtree(old, ignore_errors=True)
+        if self.key is not None:
+            self.n_buckets = n
+            spark.sql(f"DROP TABLE IF EXISTS {self.table}")
+            cols = ", ".join(
+                f"`{c.name}` {c.dataType.simpleString()}" for c in folded.schema
+            )
+            spark.sql(
+                f"CREATE TABLE {self.table} ({cols}) USING parquet "
+                f"CLUSTERED BY ({self.key}) INTO {n} BUCKETS "
+                f"LOCATION '{self.path}'"
+            )
+
+
+class _Handle:
+    """What every family handle shares: its :class:`IndexTable` frames,
+    and ``owns_path`` — True when the module allocated the build's temp
+    directory itself (caller passed ``path=None``); such directories
+    are deleted when the registry entry is replaced or cleared, so
+    repeat rebuilds in a long-lived session cannot accumulate orphaned
+    parquet dirs. Caller-supplied paths are never deleted (the caller
+    owns them)."""
+
+    __slots__ = ("tables", "owns_path")
+
+    def __init__(self, *tables: IndexTable, owns_path: bool = False) -> None:
+        self.tables = tables
         self.owns_path = owns_path
 
+    @property
+    def path(self) -> str:
+        """The first frame's directory; its parent is the build dir."""
+        return self.tables[0].path
 
-class SimHashIndex:
-    """Handle for one persisted SimHash posting index (same
-    ``owns_path`` cleanup contract as :class:`GramIndex`)."""
 
-    __slots__ = ("path", "max_hamming", "eq_blocks", "owns_path")
+class GramIndex(_Handle):
+    """Handle for one persisted gram inverted index."""
+
+    __slots__ = ("n",)
+
+    def __init__(self, path: str, n: int, owns_path: bool = False) -> None:
+        super().__init__(IndexTable(path), owns_path=owns_path)
+        self.n = n
+
+    @property
+    def grams(self) -> IndexTable:
+        return self.tables[0]
+
+
+class SimHashIndex(_Handle):
+    """Handle for one persisted SimHash posting index."""
+
+    __slots__ = ("max_hamming", "eq_blocks")
 
     def __init__(
         self,
@@ -79,26 +278,28 @@ class SimHashIndex:
         eq_blocks: int,
         owns_path: bool = False,
     ) -> None:
-        self.path = path
+        super().__init__(IndexTable(path), owns_path=owns_path)
         self.max_hamming = max_hamming
         self.eq_blocks = eq_blocks
-        self.owns_path = owns_path
+
+    @property
+    def postings(self) -> IndexTable:
+        return self.tables[0]
 
 
-class MinHashIndex:
+class MinHashIndex(_Handle):
     """Handle for one persisted MinHash signing pass: the signature
     frame (``_id, _h0.._h{n-1}``) plus the DISTINCT hashed-gram
     inverted index (``_id, _gram``) the exact-Jaccard verify needs —
     both written by the shared :func:`minhash_sig_rows` builder over
     the FULL corpus (the near-dup sweep topology, unlike the
-    batch/history split above). Same ``owns_path`` cleanup contract as
-    :class:`GramIndex`. ``bands`` is deliberately NOT a key parameter:
-    band hashes derive from the signature downstream, so one signing
-    serves any banding.
+    batch/history split above). ``bands`` is deliberately NOT a key
+    parameter: band hashes derive from the signature downstream, so one
+    signing serves any banding.
 
     Round-18 layout change (VERDICT r17 #4): the gram rows are written
-    as a ``_id``-BUCKETED external table (``rows_table``/``n_buckets``)
-    instead of plain parquet. Every served consumer keys on ``_id``
+    as an ``_id``-BUCKETED external table (``n_buckets``) instead of
+    plain parquet. Every served consumer keys on ``_id``
     (the signature derivation's groupBy, the verify stage's
     dropDuplicates and sizes aggregate), so the bucketed scan's
     reported hash(_id) partitioning satisfies them all with ZERO
@@ -106,21 +307,12 @@ class MinHashIndex:
     amortized over every probe, which is the 100 TB economics the
     plain layout was missing (at sf0.1 the columnar re-reads were
     cheap; at scale each re-read was also a full re-cluster).
-    ``rows_table=None`` (e.g. a handle constructed directly in tests)
+    ``n_buckets=0`` (e.g. a handle constructed directly in tests)
     means plain parquet and every consumer degrades gracefully —
     bucketing is pure layout, never semantics.
     """
 
-    __slots__ = (
-        "sig_path",
-        "rows_path",
-        "n_hashes",
-        "shingle_k",
-        "use_token_ngrams",
-        "owns_path",
-        "rows_table",
-        "n_buckets",
-    )
+    __slots__ = ("n_hashes", "shingle_k", "use_token_ngrams")
 
     def __init__(
         self,
@@ -130,26 +322,40 @@ class MinHashIndex:
         shingle_k: int,
         use_token_ngrams: bool,
         owns_path: bool = False,
-        rows_table: str | None = None,
         n_buckets: int = 0,
     ) -> None:
-        self.sig_path = sig_path
-        self.rows_path = rows_path
+        super().__init__(
+            IndexTable(sig_path),
+            IndexTable(rows_path, "_id" if n_buckets else None, n_buckets),
+            owns_path=owns_path,
+        )
         self.n_hashes = n_hashes
         self.shingle_k = shingle_k
         self.use_token_ngrams = use_token_ngrams
-        self.owns_path = owns_path
-        self.rows_table = rows_table
-        self.n_buckets = n_buckets
+
+    @property
+    def sig(self) -> IndexTable:
+        return self.tables[0]
+
+    @property
+    def rows(self) -> IndexTable:
+        return self.tables[1]
+
+    @property
+    def sig_path(self) -> str:
+        return self.sig.path
+
+    @property
+    def rows_path(self) -> str:
+        return self.rows.path
 
 
-class NkeyIndex:
+class NkeyIndex(_Handle):
     """Handle for one persisted canonical-key (``nkey``) OWNER-COUNT
     LEDGER of the history corpus — the static side of the incremental
-    curation pipeline's dedup stage. Same ``owns_path`` contract as
-    :class:`GramIndex`. No build parameters: the canonicalization is
-    THE shared ``canonical_nkey`` contract, so there is nothing to
-    mismatch.
+    curation pipeline's dedup stage. No build parameters: the
+    canonicalization is THE shared ``canonical_nkey`` contract, so
+    there is nothing to mismatch.
 
     Round-17 format change (the delete path forced it): the parquet
     stores ``(nkey, _n)`` signed owner-count DELTAS, not the bare
@@ -170,108 +376,24 @@ class NkeyIndex:
     Counts are correct under the modeled exactly-once single-writer
     seam; a replayed epoch would double-count owners (set membership
     survives, delete accuracy does not) — the same contract the
-    MinHash appends document."""
+    MinHash appends document.
 
-    __slots__ = ("path", "owns_path", "table", "n_buckets")
+    The ledger is an nkey-BUCKETED external table (round 18, same
+    rationale as the MinHash gram rows): the live-set fold is a groupBy
+    on nkey, so the bucketed scan makes it shuffle-free.
+    ``n_buckets=0`` = plain parquet, graceful fallback."""
 
-    def __init__(
-        self,
-        path: str,
-        owns_path: bool = False,
-        table: str | None = None,
-        n_buckets: int = 0,
-    ) -> None:
-        self.path = path
-        self.owns_path = owns_path
-        # nkey-BUCKETED external table (round 18, same rationale as
-        # MinHashIndex.rows_table): the live-set fold is a groupBy on
-        # nkey, so the bucketed scan makes it shuffle-free — exactly
-        # the layout the load_nkey_index docstring names as the
-        # production shape. None = plain parquet, graceful fallback.
-        self.table = table
-        self.n_buckets = n_buckets
+    __slots__ = ()
 
-
-def _index_buckets(spark: SparkSession) -> int:
-    """Bucket count for index-table writes. Locally this is the
-    session's default parallelism (one bucket per core keeps the probe
-    scan fully parallel); at production scale it is sized once per
-    index family via ``SPARK_GRAFT_INDEX_BUCKETS`` — a multiple of the
-    cluster's target parallelism at the data's FULL scale, per the
-    bucketed-layout rules in :mod:`etl_project_spark.sources.bucketed`.
-    The count only affects layout, never results."""
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_INDEX_BUCKETS", spark.sparkContext.defaultParallelism
+    def __init__(self, path: str, owns_path: bool = False, n_buckets: int = 0) -> None:
+        super().__init__(
+            IndexTable(path, "nkey" if n_buckets else None, n_buckets),
+            owns_path=owns_path,
         )
-    )
 
-
-def _index_table_name(kind: str, path: str) -> str:
-    """Catalog name for an index table: per-(pid, path-digest) so two
-    processes sharing a warehouse can never cross-wire each other's
-    builds (the query_scoped_index_dir race note, catalog edition) and
-    repeat builds in one session resolve to the same name (the
-    overwrite path drops + recreates it)."""
-    import hashlib
-
-    tag = hashlib.sha1(os.path.abspath(path).encode()).hexdigest()[:8]
-    return f"idx_{kind}_{os.getpid()}_{tag}"
-
-
-def _write_bucketed_index(
-    df: DataFrame,
-    table: str,
-    path: str,
-    key: str,
-    n_buckets: int,
-    *,
-    mode: str = "overwrite",
-    align: bool = False,
-) -> None:
-    """Write an index frame as an EXTERNAL parquet table bucketed on
-    ``key`` at ``path`` — the pay-once shuffle that makes every later
-    ``key``-clustered consumer (groupBy/dropDuplicates/equi-join on
-    ``key``) exchange-free (guide §2.4; the sources/bucketed.py
-    pattern, pointed at an explicit location so the per-(pid, corpus)
-    temp-dir isolation contract is unchanged).
-
-    No ``sortBy``: every consumer of these frames is a hash aggregate
-    or hash join on ``key`` — nothing needs ordered runs, and the
-    per-task sort was measurable build cost at bench scale for zero
-    read benefit. ``align=True`` adds a ``repartition(n_buckets,
-    key)`` so the write lands one file per bucket — the maintenance
-    paths (delete rewrite, compaction) use it because their inputs
-    arrive arbitrarily partitioned; the build/append hot paths skip it
-    because their input is already hash(key)-clustered by the signing
-    pipeline (the bucketed write is CORRECT under any input
-    partitioning — misalignment only costs extra files per bucket,
-    which compaction folds). ``mode="append"`` requires the table to
-    exist with the same spec (the caller passes the handle's own
-    ``n_buckets``, so it cannot drift)."""
-    spark = df.sparkSession
-    if align:
-        df = df.repartition(n_buckets, key)
-    writer = df.write.format("parquet").mode(mode).bucketBy(n_buckets, key)
-    if mode == "overwrite":
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(path, ignore_errors=True)
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
-
-
-def _register_bucketed_index(
-    spark: SparkSession, table: str, path: str, schema_ddl: str, key: str,
-    n_buckets: int,
-) -> None:
-    """(Re)point ``table`` at existing bucketed parquet files under
-    ``path`` — the metadata half of a compaction's directory swap."""
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(
-        f"CREATE TABLE {table} ({schema_ddl}) USING parquet "
-        f"CLUSTERED BY ({key}) INTO {n_buckets} BUCKETS "
-        f"LOCATION '{path}'"
-    )
+    @property
+    def ledger(self) -> IndexTable:
+        return self.tables[0]
 
 
 def query_scoped_index_dir(kind: str, sf_dir: str) -> str:
@@ -287,8 +409,6 @@ def query_scoped_index_dir(kind: str, sf_dir: str) -> str:
     stays in the path for human-readable /tmp listings. The few-MB leak
     per (pid, corpus) is bounded and lives under the OS-reaped /tmp.
     """
-    import hashlib
-
     ap = os.path.abspath(sf_dir)
     tag = hashlib.sha1(ap.encode()).hexdigest()[:8]
     base = os.path.basename(sf_dir.rstrip("/")) or "sf"
@@ -299,40 +419,54 @@ def query_scoped_index_dir(kind: str, sf_dir: str) -> str:
     )
 
 
-_GRAM: dict[str, GramIndex] = {}
-_SIMHASH: dict[str, SimHashIndex] = {}
-_MINHASH: dict[str, MinHashIndex] = {}
-_NKEY: dict[str, NkeyIndex] = {}
+#: The serving registry: one handle per (family, absolute corpus dir).
+_INDEXES: dict[tuple[type, str], _Handle] = {}
 
 
-def _drop(idx) -> None:
+def _drop(idx: _Handle | None) -> None:
     """Delete a module-owned index directory (no-op for caller paths)."""
     if idx is not None and idx.owns_path:
-        path = idx.sig_path if isinstance(idx, MinHashIndex) else idx.path
-        shutil.rmtree(os.path.dirname(path), ignore_errors=True)
+        shutil.rmtree(os.path.dirname(idx.path), ignore_errors=True)
+
+
+def _register(idx: _Handle, sf_dir: str) -> None:
+    """Serve ``idx`` for ``sf_dir``; a rebuild reaps the module-owned
+    dir of the handle it replaces."""
+    key = (type(idx), os.path.abspath(sf_dir))
+    _drop(_INDEXES.get(key))
+    _INDEXES[key] = idx
+
+
+def _lookup(family: type, sf_dir: str, **params) -> _Handle | None:
+    """The registered ``family`` handle for ``sf_dir`` if every build
+    parameter matches, else None."""
+    idx = _INDEXES.get((family, os.path.abspath(sf_dir)))
+    if idx is not None and all(getattr(idx, k) == v for k, v in params.items()):
+        return idx
+    return None
 
 
 def clear_dedup_indexes() -> None:
-    for idx in (
-        *_GRAM.values(),
-        *_SIMHASH.values(),
-        *_MINHASH.values(),
-        *_NKEY.values(),
-    ):
+    for idx in _INDEXES.values():
         _drop(idx)
-    _GRAM.clear()
-    _SIMHASH.clear()
-    _MINHASH.clear()
-    _NKEY.clear()
+    _INDEXES.clear()
 
 
 def _history_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from etl_project_spark.catalog import read_table
 
     return read_table(spark, sf_dir, "documents").filter(
         F.col("source") != BATCH_SOURCE
+    )
+
+
+def _batch_docs(spark: SparkSession, sf_dir: str, batch_source: str) -> DataFrame:
+    """The arriving batch: one documents scan carrying the pushed
+    ``source = batch_source`` filter, so history text is never read."""
+    from etl_project_spark.catalog import read_table
+
+    return read_table(spark, sf_dir, "documents").filter(
+        F.col("source") == batch_source
     )
 
 
@@ -344,29 +478,19 @@ def persist_gram_index(
     source), write it to parquet, and register it for ``sf_dir``."""
     from etl_project_spark.streaming.dedup import history_gram_index
 
-    owns = path is None
-    if path is None:
-        path = tempfile.mkdtemp(prefix="gram_index_")
-    target = os.path.join(path, f"grams_n{n}")
-    history_gram_index(_history_docs(spark, sf_dir), n=n).write.mode(
-        "overwrite"
-    ).parquet(target)
-    idx = GramIndex(target, n, owns_path=owns)
-    key = os.path.abspath(sf_dir)
-    _drop(_GRAM.get(key))  # rebuild: reap the replaced module-owned dir
-    _GRAM[key] = idx
+    owns, path = path is None, path or tempfile.mkdtemp(prefix="gram_index_")
+    idx = GramIndex(os.path.join(path, f"grams_n{n}"), n, owns_path=owns)
+    idx.grams.write(history_gram_index(_history_docs(spark, sf_dir), n=n))
+    _register(idx, sf_dir)
     return idx
 
 
 def gram_index_for(sf_dir: str, *, n: int) -> GramIndex | None:
-    idx = _GRAM.get(os.path.abspath(sf_dir))
-    if idx is not None and idx.n == n:
-        return idx
-    return None
+    return _lookup(GramIndex, sf_dir, n=n)
 
 
 def load_gram_index(spark: SparkSession, idx: GramIndex) -> DataFrame:
-    return spark.read.parquet(idx.path)
+    return idx.grams.read(spark)
 
 
 def persist_simhash_index(
@@ -389,20 +513,20 @@ def persist_simhash_index(
     grown with :func:`append_simhash_index`."""
     from etl_project_spark.streaming.dedup import history_simhash_index
 
-    owns = path is None
-    if path is None:
-        path = tempfile.mkdtemp(prefix="simhash_index_")
-    target = os.path.join(path, f"postings_h{max_hamming}b{eq_blocks}")
-    history_simhash_index(
-        _history_docs(spark, sf_dir) if docs is None else docs,
-        max_hamming=max_hamming,
-        eq_blocks=eq_blocks,
-    ).write.mode("overwrite").parquet(target)
-    idx = SimHashIndex(target, max_hamming, eq_blocks, owns_path=owns)
+    owns, path = path is None, path or tempfile.mkdtemp(prefix="simhash_index_")
+    idx = SimHashIndex(
+        os.path.join(path, f"postings_h{max_hamming}b{eq_blocks}"),
+        max_hamming, eq_blocks, owns_path=owns,
+    )
+    idx.postings.write(
+        history_simhash_index(
+            _history_docs(spark, sf_dir) if docs is None else docs,
+            max_hamming=max_hamming,
+            eq_blocks=eq_blocks,
+        )
+    )
     if register:  # see persist_minhash_index: False = caller-scoped build
-        key = os.path.abspath(sf_dir)
-        _drop(_SIMHASH.get(key))  # rebuild: reap the replaced module-owned dir
-        _SIMHASH[key] = idx
+        _register(idx, sf_dir)
     return idx
 
 
@@ -419,9 +543,11 @@ def append_simhash_frames(idx: SimHashIndex, docs: DataFrame) -> None:
     re-fingerprint. Single-writer exactly-once append seam, as ever."""
     from etl_project_spark.streaming.dedup import history_simhash_index
 
-    history_simhash_index(
-        docs, max_hamming=idx.max_hamming, eq_blocks=idx.eq_blocks
-    ).write.mode("append").parquet(idx.path)
+    idx.postings.append(
+        history_simhash_index(
+            docs, max_hamming=idx.max_hamming, eq_blocks=idx.eq_blocks
+        )
+    )
 
 
 def append_simhash_index(
@@ -436,34 +562,20 @@ def append_simhash_index(
     batch's one documents scan carries the pushed source filter;
     history text is never re-read (asserted in
     tests/test_dedup_index.py)."""
-    from pyspark.sql import functions as F
-
-    from etl_project_spark.catalog import read_table
-
-    append_simhash_frames(
-        idx,
-        read_table(spark, sf_dir, "documents").filter(
-            F.col("source") == batch_source
-        ),
-    )
+    append_simhash_frames(idx, _batch_docs(spark, sf_dir, batch_source))
     return idx
 
 
 def simhash_index_for(
     sf_dir: str, *, max_hamming: int, eq_blocks: int
 ) -> SimHashIndex | None:
-    idx = _SIMHASH.get(os.path.abspath(sf_dir))
-    if (
-        idx is not None
-        and idx.max_hamming == max_hamming
-        and idx.eq_blocks == eq_blocks
-    ):
-        return idx
-    return None
+    return _lookup(
+        SimHashIndex, sf_dir, max_hamming=max_hamming, eq_blocks=eq_blocks
+    )
 
 
 def load_simhash_index(spark: SparkSession, idx: SimHashIndex) -> DataFrame:
-    return spark.read.parquet(idx.path)
+    return idx.postings.read(spark)
 
 
 def persist_minhash_index(
@@ -493,14 +605,18 @@ def persist_minhash_index(
     key is the corpus dir, and serving consumers assume a registered
     index covers it entirely."""
     from etl_project_spark.catalog import read_table
-    from etl_project_spark.operators.dedup import minhash_sig_rows
+    from etl_project_spark.operators.dedup import (
+        minhash_sig_from_rows,
+        minhash_sig_rows,
+    )
 
-    owns = path is None
-    if path is None:
-        path = tempfile.mkdtemp(prefix="minhash_index_")
+    owns, path = path is None, path or tempfile.mkdtemp(prefix="minhash_index_")
     tag = f"nh{n_hashes}_k{shingle_k}_{'tok' if use_token_ngrams else 'char'}"
-    sig_path = os.path.join(path, f"sig_{tag}")
-    rows_path = os.path.join(path, f"grams_{tag}")
+    idx = MinHashIndex(
+        os.path.join(path, f"sig_{tag}"), os.path.join(path, f"grams_{tag}"),
+        n_hashes, shingle_k, use_token_ngrams, owns_path=owns,
+        n_buckets=spark.sparkContext.defaultParallelism,
+    )
     _, rows = minhash_sig_rows(
         read_table(spark, sf_dir, "documents") if docs is None else docs,
         "doc_id",
@@ -515,12 +631,8 @@ def persist_minhash_index(
     # write pays replaces a re-cluster per consumer per probe — the
     # sig derivation below and every served verify's dropDuplicates /
     # sizes agg read the bucketed scan's hash(_id) layout
-    # exchange-free.
-    nb = _index_buckets(spark)
-    rows_table = _index_table_name("mhrows", rows_path)
-    _write_bucketed_index(
-        rows.dropDuplicates(["_id", "_gram"]), rows_table, rows_path, "_id", nb
-    )
+    # exchange-free. Rows first, signatures last (the append order).
+    idx.rows.write(rows.dropDuplicates(["_id", "_gram"]))
     # Derive the signature FROM the written gram table instead of
     # re-running the text scan + shingle explode a second time (the
     # append path's minhash_frames_for already does this): min is
@@ -530,39 +642,24 @@ def persist_minhash_index(
     # (_id, _gram int64) bucketed parquet, not the documents text —
     # with the bucketed layout the groupBy(_id) now runs with zero
     # exchanges.
-    from etl_project_spark.operators.dedup import minhash_sig_from_rows
-
-    minhash_sig_from_rows(
-        _table_frame(spark, rows_table, rows_path), n_hashes=n_hashes
-    ).write.mode("overwrite").parquet(sig_path)
-    idx = MinHashIndex(
-        sig_path, rows_path, n_hashes, shingle_k, use_token_ngrams,
-        owns_path=owns, rows_table=rows_table, n_buckets=nb,
-    )
+    idx.sig.write(minhash_sig_from_rows(idx.rows.read(spark), n_hashes=n_hashes))
     # register=False builds a caller-scoped index WITHOUT flipping the
     # process-local serving switch: the indexed registry query uses it
     # so running it can never silently convert the inflight query's
     # next run (same session, e.g. mid-sweep) into a served run —
     # that would corrupt the inflight timing series, not its answer.
     if register:
-        key = os.path.abspath(sf_dir)
-        _drop(_MINHASH.get(key))  # rebuild: reap the replaced module-owned dir
-        _MINHASH[key] = idx
+        _register(idx, sf_dir)
     return idx
 
 
 def minhash_index_for(
     sf_dir: str, *, n_hashes: int, shingle_k: int, use_token_ngrams: bool
 ) -> MinHashIndex | None:
-    idx = _MINHASH.get(os.path.abspath(sf_dir))
-    if (
-        idx is not None
-        and idx.n_hashes == n_hashes
-        and idx.shingle_k == shingle_k
-        and idx.use_token_ngrams == use_token_ngrams
-    ):
-        return idx
-    return None
+    return _lookup(
+        MinHashIndex, sf_dir, n_hashes=n_hashes, shingle_k=shingle_k,
+        use_token_ngrams=use_token_ngrams,
+    )
 
 
 def load_minhash_index(
@@ -574,28 +671,7 @@ def load_minhash_index(
     _id-keyed consumer is exchange-free; otherwise (direct-constructed
     handles, a different session) it falls back to the plain parquet
     read — identical rows, just re-clustered per consumer."""
-    return spark.read.parquet(idx.sig_path), _rows_frame(spark, idx)
-
-
-def _rows_frame(spark: SparkSession, idx: MinHashIndex) -> DataFrame:
-    return _table_frame(spark, idx.rows_table, idx.rows_path)
-
-
-def _table_frame(spark: SparkSession, table: str | None, path: str) -> DataFrame:
-    """Resolve an index frame through its bucketed table when this
-    session's catalog knows it, else plain parquet. The refresh is
-    load-bearing: appends/deletes/compactions mutate the table's FILES
-    (possibly from a foreachBatch-cloned session or via directory
-    swaps), and a session that scanned the table earlier holds a
-    cached file listing that would silently serve the pre-mutation
-    snapshot (measured: a streamed append was invisible to the
-    builder session until refreshed). Cheap local re-list here; a
-    manifest table format does this bookkeeping transactionally at
-    scale."""
-    if table is not None and spark.catalog.tableExists(table):
-        spark.catalog.refreshTable(table)
-        return spark.table(table)
-    return spark.read.parquet(path)
+    return idx.sig.read(spark), idx.rows.read(spark)
 
 
 def batch_minhash_frames(
@@ -621,14 +697,7 @@ def batch_minhash_frames(
     (doc_id is unique corpus-wide, so the signature frame stays one
     row per doc and the per-doc distinct gram set is unchanged).
     """
-    from pyspark.sql import functions as F
-
-    from etl_project_spark.catalog import read_table
-
-    batch = read_table(spark, sf_dir, "documents").filter(
-        F.col("source") == batch_source
-    )
-    return minhash_frames_for(batch, idx)
+    return minhash_frames_for(_batch_docs(spark, sf_dir, batch_source), idx)
 
 
 def minhash_frames_for(
@@ -637,8 +706,9 @@ def minhash_frames_for(
     """(signature, distinct gram rows) for an ARBITRARY docs frame,
     signed with the index's own parameters. The signature is derived
     FROM the distinct rows (min is duplicate-insensitive, so values
-    are unchanged): when an append persists ``rows``, the sig write
-    then reuses that cache instead of re-running the shingle explode."""
+    are unchanged), which is what lets an append sign from the gram
+    rows it has just written instead of re-running the shingle
+    explode."""
     from etl_project_spark.operators.dedup import (
         minhash_sig_from_rows,
         minhash_sig_rows,
@@ -690,27 +760,16 @@ def append_minhash_frames(idx: MinHashIndex, docs: DataFrame) -> None:
     from etl_project_spark.operators.dedup import minhash_sig_from_rows
 
     sig, rows = minhash_frames_for(docs, idx)
-    spark = docs.sparkSession
     before = _data_files(idx.rows_path)
-    if idx.rows_table is not None and spark.catalog.tableExists(idx.rows_table):
-        # Bucketed index (r18): the batch's rows append INTO the same
-        # (_id, n_buckets) spec, so the grown table keeps the
-        # exchange-free probe property; each append adds one file per
-        # bucket (compact_minhash_index folds them).
-        _write_bucketed_index(
-            rows, idx.rows_table, idx.rows_path, "_id", idx.n_buckets,
-            mode="append",
-        )
-    else:
-        rows.write.mode("append").parquet(idx.rows_path)
+    idx.rows.append(rows)
     new = sorted(_data_files(idx.rows_path) - before)
     if new:
         sig = minhash_sig_from_rows(
-            spark.read.parquet(*new), n_hashes=idx.n_hashes
+            docs.sparkSession.read.parquet(*new), n_hashes=idx.n_hashes
         )
     # else: empty-batch append wrote no data files — the in-memory sig
     # (itself empty) is written as-is, trivially cheap.
-    sig.write.mode("append").parquet(idx.sig_path)
+    idx.sig.append(sig)
 
 
 def _data_files(path: str) -> set[str]:
@@ -753,26 +812,14 @@ def append_minhash_index(
     for atomicity — single-writer append is the modeled contract here,
     matching the one-ingest-pipeline topology.
 
-    The batch's gram rows are persisted for the duration of the two
-    writes: ``sig`` is an aggregation OVER ``rows``, so writing both
-    frames unpersisted would run the batch shingle explode twice. The
-    cache is released directly (not via the session-scoped tracker —
-    both writes are actions that complete inside this call, and the
-    tracker's ``release_persists`` would clobber caches a CALLER's
-    pending action still needs).
+    The batch is shingled exactly once, by the gram-rows write; the
+    signature is then aggregated from the part-files that write added
+    (see :func:`append_minhash_frames`), so nothing is cached across
+    the two writes.
 
     Returns the same (mutated-on-disk) handle for chaining.
     """
-    from pyspark.sql import functions as F
-
-    from etl_project_spark.catalog import read_table
-
-    append_minhash_frames(
-        idx,
-        read_table(spark, sf_dir, "documents").filter(
-            F.col("source") == batch_source
-        ),
-    )
+    append_minhash_frames(idx, _batch_docs(spark, sf_dir, batch_source))
     return idx
 
 
@@ -800,8 +847,6 @@ def _affected_files_frame(
     """The distinct-file-paths frame behind
     :func:`_affected_index_files` — factored out so tests can assert
     the executed plan (column-pruned to ``_id``; no text anywhere)."""
-    from pyspark.sql import functions as F
-
     return (
         spark.read.parquet(path)
         .select("_id", F.input_file_name().alias("_file"))
@@ -809,66 +854,6 @@ def _affected_files_frame(
         .select("_file")
         .distinct()
     )
-
-
-def _rewrite_files_minus(
-    spark: SparkSession,
-    path: str,
-    files: list[str],
-    tombstone_ids: DataFrame,
-    bucket_spec: tuple[str, int] | None = None,
-) -> None:
-    """Rewrite ``files`` (part-files of the parquet dir ``path``)
-    without the tombstoned ``_id`` rows: survivors are staged to a
-    sibling dir, moved in, and only then are the originals removed.
-
-    That order makes the crash window's failure state benign
-    DUPLICATES (survivor rows present twice until the originals go),
-    which every consumer collapses (``dropDuplicates`` on gram rows;
-    banded/candidate ``distinct()`` over signature rows) — never
-    missing rows, which the delete-first order would risk. Same
-    single-writer exactly-once seam as the appends; on a real object
-    store this is one atomic manifest swap (Delta/Iceberg
-    rewrite-and-commit).
-
-    ``bucket_spec=(key, n_buckets)`` marks ``path`` as a bucketed
-    table's location (r18): the staged survivors are then written with
-    the SAME bucket spec, so the moved-in part-files carry valid
-    bucket-id suffixes and the table's exchange-free scan property
-    survives the delete (a plain-parquet staging write would strip the
-    bucket mapping and silently corrupt every clustered read).
-    Survivors re-hash into exactly their original buckets (same
-    murmur3, same count), so merging them back is layout-exact."""
-    import urllib.parse
-    import urllib.request
-
-    staging = path.rstrip("/") + ".staging_delete"
-    shutil.rmtree(staging, ignore_errors=True)
-    survivors = spark.read.parquet(*files).join(
-        tombstone_ids.select("_id"), "_id", "left_anti"
-    )
-    if bucket_spec is not None:
-        key, nb = bucket_spec
-        stg_table = _index_table_name("stgdel", staging)
-        _write_bucketed_index(survivors, stg_table, staging, key, nb, align=True)
-        spark.sql(f"DROP TABLE IF EXISTS {stg_table}")
-    else:
-        survivors.write.mode("overwrite").parquet(staging)
-    moved = []
-    for name in os.listdir(staging):
-        if name.startswith("part-"):
-            # staged part names carry Spark's per-job UUID, so moving
-            # them in cannot collide with existing part-files
-            dst = os.path.join(path, name)
-            shutil.move(os.path.join(staging, name), dst)
-            moved.append(dst)
-    for f in files:
-        local = urllib.request.url2pathname(urllib.parse.urlparse(f).path)
-        try:
-            os.remove(local)
-        except FileNotFoundError:
-            pass
-    shutil.rmtree(staging, ignore_errors=True)
 
 
 def delete_from_minhash_index(
@@ -898,17 +883,8 @@ def delete_from_minhash_index(
     rows cannot perturb any other doc's). Every ``signed=`` consumer
     is oblivious to how the index shrank.
     """
-    for path in (idx.sig_path, idx.rows_path):
-        affected = _affected_index_files(spark, path, tombstone_ids)
-        if affected:
-            spec = (
-                ("_id", idx.n_buckets)
-                if path == idx.rows_path and idx.rows_table is not None
-                else None
-            )
-            _rewrite_files_minus(
-                spark, path, affected, tombstone_ids, bucket_spec=spec
-            )
+    for table in idx.tables:
+        table.retract_ids(spark, tombstone_ids)
     return idx
 
 
@@ -920,50 +896,19 @@ def compact_minhash_index(
     ``mode("append")`` adds files, so after K daily cycles a probe
     scan opens K× the files (and any crash-retry duplicates persist on
     disk); read amplification grows without bound until someone
-    rewrites. This is that rewrite: each frame is read, gram rows are
-    re-distincted (folding benign duplicate rows from retried
-    appends/deletes), coalesced, staged, and atomically swapped in
-    (``os.rename`` of the directory — the manifest-commit seam the
-    append docstrings name; on an object store this is the
-    Delta/Iceberg OPTIMIZE + snapshot swap, since object stores have
-    no atomic rename).
+    rewrites. This is that rewrite (:meth:`IndexTable.compact`): each
+    frame is read, gram rows are re-distincted (folding benign
+    duplicate rows from retried appends/deletes), rewritten in
+    ``target_files`` files (the bucketed gram rows re-bucketed at
+    ``target_files`` buckets, one file per bucket) and swapped in.
 
     Compacted ≡ grown frame equality is pinned in
-    tests/test_dedup_index.py; degradation-vs-cycles and the recovery
-    are measured in BASELINE.md (tools/index_compact_ab.py).
+    tests/test_dedup_index.py.
     """
-    for path, dedup_cols in (
-        (idx.sig_path, ["_id"]),
-        (idx.rows_path, ["_id", "_gram"]),
-    ):
-        staging = path.rstrip("/") + ".staging_compact"
-        old = path.rstrip("/") + ".pre_compact"
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        folded = spark.read.parquet(path).dropDuplicates(dedup_cols)
-        bucketed = path == idx.rows_path and idx.rows_table is not None
-        if bucketed:
-            # Re-bucket at target_files buckets (one file per bucket):
-            # the fold honors the file-count goal AND keeps the
-            # exchange-free probe layout. A maintenance window sizes
-            # target_files to its scale's parallelism; the count only
-            # affects layout.
-            stg_table = _index_table_name("stgcmp", staging)
-            _write_bucketed_index(
-                folded, stg_table, staging, "_id", target_files, align=True
-            )
-            spark.sql(f"DROP TABLE IF EXISTS {stg_table}")
-        else:
-            folded.coalesce(target_files).write.mode("overwrite").parquet(staging)
-        os.rename(path, old)
-        os.rename(staging, path)
-        shutil.rmtree(old, ignore_errors=True)
-        if bucketed:
-            _register_bucketed_index(
-                spark, idx.rows_table, path,
-                "_id BIGINT, _gram BIGINT", "_id", target_files,
-            )
-            idx.n_buckets = target_files
+    idx.sig.compact(spark, lambda df: df.dropDuplicates(["_id"]), target_files)
+    idx.rows.compact(
+        spark, lambda df: df.dropDuplicates(["_id", "_gram"]), target_files
+    )
     return idx
 
 
@@ -987,31 +932,26 @@ def persist_nkey_index(
     :func:`persist_minhash_index` for the contract. Partial builds are
     grown with :func:`append_nkey_index` and shrunk with
     :func:`delete_from_nkey_index`."""
-    owns = path is None
-    if path is None:
-        path = tempfile.mkdtemp(prefix="nkey_index_")
-    target = os.path.join(path, "nkeys")
+    owns, path = path is None, path or tempfile.mkdtemp(prefix="nkey_index_")
     # nkey-BUCKETED ledger (r18, VERDICT r17 #4): the live-set fold
     # (groupBy nkey) and the consumers' anti-joins cluster on nkey, so
     # the bucketed scan serves them exchange-free — the layout
     # load_nkey_index's docstring always named as the production
     # shape, now actually written.
-    nb = _index_buckets(spark)
-    table = _index_table_name("nkeys", target)
-    _write_bucketed_index(
-        _nkey_ledger(_history_docs(spark, sf_dir) if docs is None else docs),
-        table, target, "nkey", nb,
+    idx = NkeyIndex(
+        os.path.join(path, "nkeys"), owns_path=owns,
+        n_buckets=spark.sparkContext.defaultParallelism,
     )
-    idx = NkeyIndex(target, owns_path=owns, table=table, n_buckets=nb)
+    idx.ledger.write(
+        _nkey_ledger(_history_docs(spark, sf_dir) if docs is None else docs)
+    )
     if register:  # see persist_minhash_index: False = caller-scoped build
-        key = os.path.abspath(sf_dir)
-        _drop(_NKEY.get(key))  # rebuild: reap the replaced module-owned dir
-        _NKEY[key] = idx
+        _register(idx, sf_dir)
     return idx
 
 
 def nkey_index_for(sf_dir: str) -> NkeyIndex | None:
-    return _NKEY.get(os.path.abspath(sf_dir))
+    return _lookup(NkeyIndex, sf_dir)
 
 
 def _nkey_ledger(docs: DataFrame) -> DataFrame:
@@ -1020,14 +960,22 @@ def _nkey_ledger(docs: DataFrame) -> DataFrame:
     per key. ``GROUP BY`` keys ≡ ``DISTINCT``, so the ledger's key set
     is definitionally ``history_nkey_index`` over the same docs — the
     counts are what the delete path adds on top."""
-    from pyspark.sql import functions as F
-
     from etl_project_spark.operators.dedup import canonical_nkey
 
     return (
         docs.select(canonical_nkey(F.col("text")).alias("nkey"))
         .groupBy("nkey")
         .agg(F.count(F.lit(1)).alias("_n"))
+    )
+
+
+def _fold_ledger(ledger: DataFrame) -> DataFrame:
+    """Sum the signed deltas per key and keep keys with surviving
+    owners — the live ``(nkey, _n)`` rows."""
+    return (
+        ledger.groupBy("nkey")
+        .agg(F.sum("_n").alias("_n"))
+        .filter(F.col("_n") > 0)
     )
 
 
@@ -1040,15 +988,7 @@ def load_nkey_index(spark: SparkSession, idx: NkeyIndex) -> DataFrame:
     and since r18 the ledger IS bucketed by nkey, so the fold runs
     shuffle-free (plain-parquet fallback for handles without a live
     catalog entry in this session)."""
-    from pyspark.sql import functions as F
-
-    src = _table_frame(spark, idx.table, idx.path)
-    return (
-        src.groupBy("nkey")
-        .agg(F.sum("_n").alias("_n"))
-        .filter(F.col("_n") > 0)
-        .select("nkey")
-    )
+    return _fold_ledger(idx.ledger.read(spark)).select("nkey")
 
 
 def append_nkey_index(
@@ -1071,28 +1011,8 @@ def append_nkey_index(
     the set property. Folded grown index == ``history_nkey_index``
     over history ∪ batch, exactly (pinned in tests/test_dedup_index).
     """
-    from pyspark.sql import functions as F
-
-    from etl_project_spark.catalog import read_table
-
-    batch = read_table(spark, sf_dir, "documents").filter(
-        F.col("source") == batch_source
-    )
-    _append_nkey_ledger(spark, idx, _nkey_ledger(batch))
+    idx.ledger.append(_nkey_ledger(_batch_docs(spark, sf_dir, batch_source)))
     return idx
-
-
-def _append_nkey_ledger(
-    spark: SparkSession, idx: NkeyIndex, ledger: DataFrame
-) -> None:
-    """Blind-append ledger delta rows, preserving the bucketed layout
-    when the handle carries one (plain parquet append otherwise)."""
-    if idx.table is not None and spark.catalog.tableExists(idx.table):
-        _write_bucketed_index(
-            ledger, idx.table, idx.path, "nkey", idx.n_buckets, mode="append"
-        )
-    else:
-        ledger.write.mode("append").parquet(idx.path)
 
 
 def delete_from_nkey_index(
@@ -1114,50 +1034,18 @@ def delete_from_nkey_index(
     :func:`compact_nkey_index` folding the tombstone rows away
     physically on the next maintenance window.
     """
-    from pyspark.sql import functions as F
-
-    _append_nkey_ledger(
-        spark,
-        idx,
-        _nkey_ledger(tombstoned_docs).select("nkey", (-F.col("_n")).alias("_n")),
+    idx.ledger.append(
+        _nkey_ledger(tombstoned_docs).select("nkey", (-F.col("_n")).alias("_n"))
     )
     return idx
 
 
 def compact_nkey_index(spark: SparkSession, idx: NkeyIndex) -> NkeyIndex:
     """Fold the ledger physically: aggregate the signed deltas, drop
-    dead keys (``SUM(_n) <= 0``), rewrite as one compact file set, and
-    atomically swap the directory in — the periodic fold-in that
-    bounds both the ledger's file count and the probe-side
+    dead keys (``SUM(_n) <= 0``), rewrite as one compact file set of 8
+    buckets, and atomically swap the directory in — the periodic
+    fold-in that bounds both the ledger's file count and the probe-side
     aggregate's input after K append/delete cycles. Folded ≡ unfolded
     live set is pinned in tests/test_dedup_index.py."""
-    from pyspark.sql import functions as F
-
-    staging = idx.path.rstrip("/") + ".staging_compact"
-    old = idx.path.rstrip("/") + ".pre_compact"
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    folded = (
-        spark.read.parquet(idx.path)
-        .groupBy("nkey")
-        .agg(F.sum("_n").alias("_n"))
-        .filter(F.col("_n") > 0)
-    )
-    bucketed = idx.table is not None and spark.catalog.tableExists(idx.table)
-    if bucketed:
-        # Re-bucket at the fold width (8 — one file per bucket), so the
-        # compacted ledger keeps the shuffle-free fold property.
-        stg_table = _index_table_name("stgnk", staging)
-        _write_bucketed_index(folded, stg_table, staging, "nkey", 8, align=True)
-        spark.sql(f"DROP TABLE IF EXISTS {stg_table}")
-    else:
-        folded.coalesce(8).write.mode("overwrite").parquet(staging)
-    os.rename(idx.path, old)
-    os.rename(staging, idx.path)
-    shutil.rmtree(old, ignore_errors=True)
-    if bucketed:
-        _register_bucketed_index(
-            spark, idx.table, idx.path, "nkey STRING, _n BIGINT", "nkey", 8
-        )
-        idx.n_buckets = 8
+    idx.ledger.compact(spark, _fold_ledger, 8)
     return idx

@@ -830,6 +830,59 @@ def test_nkey_delete_equals_rebuild_minus_tombstones(spark, tmp_path):
     assert folded == expected and folded
 
 
+def test_catalog_miss_falls_back_to_plain_parquet(spark, tmp_path):
+    """The bucketed index tables must survive a catalog that has lost
+    their entries (DROP TABLE on an external table keeps the files; a
+    fresh SparkContext loses the entries the same way): append and load
+    go through the plain-parquet fallback, compaction re-registers the
+    bucketed table, and every frame equals a one-shot rebuild."""
+    from etl_project_spark.catalog import read_table
+
+    full_docs = read_table(spark, SF_ORACLE, "documents")
+    mh = DX.persist_minhash_index(
+        spark, SF_ORACLE, path=str(tmp_path / "mh"), register=False,
+        docs=DX._history_docs(spark, SF_ORACLE),
+    )
+    nk = DX.persist_nkey_index(
+        spark, SF_ORACLE, path=str(tmp_path / "nk"), register=False
+    )
+    tables = [mh.rows.table, nk.ledger.table]
+    for table in tables:
+        assert spark.catalog.tableExists(table)
+        spark.sql(f"DROP TABLE {table}")
+
+    DX.append_minhash_index(spark, SF_ORACLE, mh)
+    DX.append_nkey_index(spark, SF_ORACLE, nk)
+    assert not any(spark.catalog.tableExists(t) for t in tables)
+    mh_full = _frames_sorted(
+        spark,
+        DX.persist_minhash_index(
+            spark, SF_ORACLE, path=str(tmp_path / "mh_full"), register=False
+        ),
+    )
+    nk_full = sorted(
+        r.nkey
+        for r in DX.load_nkey_index(
+            spark,
+            DX.persist_nkey_index(
+                spark, SF_ORACLE, path=str(tmp_path / "nk_full"),
+                register=False, docs=full_docs,
+            ),
+        ).collect()
+    )
+
+    def nkeys():
+        return sorted(r.nkey for r in DX.load_nkey_index(spark, nk).collect())
+
+    assert _frames_sorted(spark, mh) == mh_full and mh_full[0]
+    assert nkeys() == nk_full and nk_full
+    DX.compact_minhash_index(spark, mh, target_files=2)
+    DX.compact_nkey_index(spark, nk)
+    assert all(spark.catalog.tableExists(t) for t in tables)
+    assert _frames_sorted(spark, mh) == mh_full
+    assert nkeys() == nk_full
+
+
 def test_simhash_append_grown_equals_rebuild(spark, tmp_path):
     """Posting rows are per-doc pure functions of (text, layout), so a
     history-built posting index grown by append_simhash_index must be
