@@ -209,12 +209,11 @@ def main() -> None:
 
     # Host calib at START as well as end (round-17 verdict #6): calib
     # was measured only at run end, so a mid-run host throttle was
-    # invisible in the compact line — r17's driver window degraded 4×
-    # and the per-query numbers could not be machine-flagged. Both
-    # readings now ship in the line; a large start/end gap marks the
-    # window as throttled. calib_numpy_s is the end reading (its
-    # meaning is unchanged for cross-round diffs), so the line carries
-    # no separate calib_end.
+    # invisible — r17's driver window degraded 4× and the per-query
+    # numbers could not be machine-flagged. A large start/end gap in
+    # BENCH_DETAIL marks the window as throttled. The compact line
+    # carries only the end reading (calib_numpy_s): a second calib key
+    # pushed it over its 1900-char budget and shed a bench query.
     calib_start = host_calib()
 
     spark = get_spark("etl-project-spark-bench")
@@ -316,7 +315,6 @@ def main() -> None:
         "queries": {k: round(v, 2) for k, v in timings.items()},
         "steady_total": detail["steady_state"]["value"],
         "calib_numpy_s": detail["host_calib"]["numpy_matmul_s"],
-        "calib_start": calib_start["numpy_matmul_s"],
         "sf": detail["sf"],
     }
     line = json.dumps(compact, separators=(",", ":"))

@@ -1,6 +1,6 @@
 """The project's single definition of 'hash parity' between a Spark
-result and its DuckDB oracle, shared by verify_driver.py and
-parity_sf.py so the two checkers can never silently diverge.
+result and its DuckDB oracle, shared by verify_driver.py, parity_sf.py
+and ab.py so the checkers can never silently diverge.
 
 Semantics: canonicalize both frames (columns sorted by name upstream by
 the caller's SELECT contract; rows sorted by all columns), then compare
@@ -11,6 +11,9 @@ sentinel.
 """
 
 from __future__ import annotations
+
+import hashlib
+from decimal import Decimal
 
 import pandas as pd
 
@@ -37,3 +40,28 @@ def frames_match(sp: pd.DataFrame, oc: pd.DataFrame) -> bool:
         if not same:
             return False
     return True
+
+
+def _cell(v) -> str:
+    """Text of one object-column value, equal for values ``==`` equates."""
+    if isinstance(v, Decimal):
+        return "0" if v == 0 else str(v.normalize())
+    return repr(v.tolist() if hasattr(v, "tolist") else v)
+
+
+def frame_digest(df: pd.DataFrame) -> str:
+    """Digest of a canonicalized frame, equal for two frames exactly
+    when :func:`frames_match` holds between them, provided each column
+    is numeric on both sides or on neither. Lets two processes compare
+    results without shipping them."""
+    h = hashlib.sha256(repr((df.shape, list(df.columns))).encode())
+    for c in df.columns:
+        col = df[c]
+        if pd.api.types.is_numeric_dtype(col):
+            # + 0.0 folds -0.0 into 0.0, which == treats as equal
+            vals = col.astype(float).fillna(-9e99).to_numpy() + 0.0
+            h.update(b"n" + vals.tobytes())
+        else:
+            cells = col.astype(object).where(col.notna(), "~")
+            h.update(b"o" + "\x00".join(map(_cell, cells)).encode())
+    return h.hexdigest()

@@ -15,12 +15,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from etl_project_spark.catalog import TABLES  # noqa: E402
 from tools.compare_frames import canon, frames_match  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
 
 
 def main() -> int:

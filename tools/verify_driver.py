@@ -18,11 +18,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF = "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
-
+from etl_project_spark.catalog import TABLES  # noqa: E402
 from tools.compare_frames import canon, frames_match  # noqa: E402
 
 
