@@ -201,24 +201,14 @@ def q_minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     miss would surface as a hard hash-compare failure, not flake.
     Wider banding trades ~2× band-join rows for that guarantee; the
     recall-vs-bruteforce property test in tests/test_dedup.py guards
-    the family independently of corpus.
+    the family independently of corpus. The served form of the same
+    sweep, from a persisted signing index, is
+    ``q_minhash_indexed_pairs``.
     """
-    from etl_project_spark.sources.dedup_index import (
-        load_minhash_index,
-        minhash_index_for,
-    )
-
     d = _t(spark, sf_dir, "documents")
-    # Serving amortization (round-14, the gram/SimHash index
-    # precedent): a session that has run ``persist_minhash_index``
-    # answers repeat sweeps from the persisted signature + gram frames
-    # and skips the signing pass entirely. No registration (the
-    # driver's correctness runs) → the self-contained inflight path.
-    idx = minhash_index_for(sf_dir, n_hashes=64, shingle_k=3, use_token_ngrams=True)
-    signed = load_minhash_index(spark, idx) if idx is not None else None
     return DD.minhash_near_dup_pairs(
         d, "doc_id", "text", n_hashes=64, bands=32, shingle_k=3,
-        threshold=0.5, use_token_ngrams=True, prefilter=False, signed=signed,
+        threshold=0.5, use_token_ngrams=True, prefilter=False,
     )
 
 
@@ -241,11 +231,10 @@ def q_minhash_indexed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The build is part of the query so the registry entry is
     self-contained and deterministic; in production the build runs
     once and probes amortize it (measured 2.1× steady / 2.8× cold on
-    repeat sweeps, BASELINE.md round 14). ``register=False`` keeps the
-    build caller-scoped: running this query never flips the
-    process-local serving switch, so the inflight twin's timing series
-    stays a measurement of the inflight plan. Same oracle as
-    ``q_minhash_near_dup_pairs`` — the served path returns the
+    repeat sweeps, BASELINE.md round 14). The index is a handle this
+    query builds and passes; it is visible to no other query, so the
+    inflight twin always runs (and times) the inflight plan. Same
+    oracle as ``q_minhash_near_dup_pairs`` — the served path returns the
     identical pair set by construction (same ``minhash_sig_rows``
     builder wrote the index), so one SQL twin checks both; the
     no-documents-scan property is asserted in
@@ -267,7 +256,7 @@ def q_minhash_indexed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = query_scoped_index_dir("minhash", sf_dir)
     idx = persist_minhash_index(
         spark, sf_dir, n_hashes=64, shingle_k=3, use_token_ngrams=True,
-        path=path, register=False,
+        path=path,
     )
     d = _t(spark, sf_dir, "documents")
     return DD.minhash_near_dup_pairs(
@@ -307,9 +296,8 @@ def q_minhash_index_append_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_dedup_index.py.
 
     Build + append + probe all inside the query so the registry entry
-    is self-contained and deterministic; ``register=False`` keeps the
-    index caller-scoped (the inflight twin's timing series stays
-    inflight — see ``q_minhash_indexed_pairs``). Same
+    is self-contained and deterministic; the index handle stays local
+    to the query (see ``q_minhash_indexed_pairs``). Same
     per-(process, corpus-abspath) temp dir contract; append-vs-rebuild
     economics are measured in BASELINE.md (round 16).
     """
@@ -324,7 +312,7 @@ def q_minhash_index_append_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = query_scoped_index_dir("minhash_append", sf_dir)
     idx = persist_minhash_index(
         spark, sf_dir, n_hashes=64, shingle_k=3, use_token_ngrams=True,
-        path=path, register=False, docs=_history_docs(spark, sf_dir),
+        path=path, docs=_history_docs(spark, sf_dir),
     )
     append_minhash_index(spark, sf_dir, idx)
     d = _t(spark, sf_dir, "documents")
@@ -398,7 +386,7 @@ def q_minhash_batch_probe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = query_scoped_index_dir("minhash_probe", sf_dir)
     idx = persist_minhash_index(
         spark, sf_dir, n_hashes=64, shingle_k=3, use_token_ngrams=True,
-        path=path, register=False, docs=hist,
+        path=path, docs=hist,
     )
     append_minhash_frames(idx, batch)
     return DD.minhash_near_dup_pairs(
@@ -483,7 +471,7 @@ def q_minhash_index_delete_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = query_scoped_index_dir("minhash_delete", sf_dir)
     idx = persist_minhash_index(
         spark, sf_dir, n_hashes=64, shingle_k=3, use_token_ngrams=True,
-        path=path, register=False, docs=hist,
+        path=path, docs=hist,
     )
     append_minhash_frames(idx, batch)
     delete_from_minhash_index(spark, idx, tomb)
@@ -655,7 +643,7 @@ def q_simhash_index_append_matches(spark: SparkSession, sf_dir: str) -> DataFram
     path = query_scoped_index_dir("simhash_append", sf_dir)
     idx = persist_simhash_index(
         spark, sf_dir, max_hamming=6, eq_blocks=2,
-        path=path, register=False, docs=older,
+        path=path, docs=older,
     )
     append_simhash_frames(idx, appended)
     return stream_simhash_near_dup(
@@ -1008,43 +996,32 @@ def q_incremental_dedup_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame
     (``gram_rows_hashed``; round-13: each side filters its sources
     BEFORE shingling — the r12 form shingled the whole table then
     filtered — and the sizes join lands AFTER the intersection
-    aggregate, where both frames are candidate-bounded). The HISTORY
-    side is additionally servable from the persisted layout registry
-    (:mod:`etl_project_spark.sources.dedup_index`): when a session has
-    run ``persist_gram_index``, repeat batches skip the history shingle
-    scan entirely and probe the parquet index (measured 6.2× per repeat
-    batch at sf1) — the streaming twin
-    (``stream_incremental_dedup_scores``) consumes the identical frame.
+    aggregate, where both frames are candidate-bounded). This query
+    always shingles history itself; the pay-once form is the persisted
+    gram index (:func:`~etl_project_spark.sources.dedup_index.persist_gram_index`),
+    whose handle feeds the streaming twin
+    (``stream_incremental_dedup_scores``) the identical frame, so repeat
+    batches skip the history shingle scan (measured 6.2× per repeat
+    batch at sf1).
     Docs with no overlapping gram still emit a row (best_jaccard 0, no
     match) via the left join — the downstream router needs a decision
     for every new doc, not just dupes.
     """
     from pyspark.sql import Window as W
 
-    from etl_project_spark.sources.dedup_index import (
-        BATCH_SOURCE,
-        gram_index_for,
-        load_gram_index,
-    )
+    from etl_project_spark.sources.dedup_index import BATCH_SOURCE
 
     d = _t(spark, sf_dir, "documents")
-    idx = gram_index_for(sf_dir, n=3)
-    if idx is not None:
-        served = load_gram_index(spark, idx)
-        hg = served.select("_hid", "_g")
-        hsz = served.groupBy("_hid").agg(F.first("_szh").alias("_szh"))
-    else:
-        # Examined r17, left alone: hg/bg each feed two consumers
-        # (overlap join + size agg) so each side's shingle pass runs
-        # twice — but persisting both frames measured SLOWER (~1.0 s
-        # recompute vs ~1.9-2.1 s cached reps at sf0.1): the cache
-        # materialization jobs cost more than the doubled codegen
-        # shingle scan. The served branch (gram_index_for) is the real
-        # no-rescan answer at scale.
-        hg = DD.gram_rows_hashed(
-            d.filter(F.col("source") != BATCH_SOURCE), n=3, id_out="_hid"
-        )
-        hsz = hg.groupBy("_hid").agg(F.count(F.lit(1)).alias("_szh"))
+    # Examined r17, left alone: hg/bg each feed two consumers (overlap
+    # join + size agg) so each side's shingle pass runs twice — but
+    # persisting both frames measured SLOWER (~1.0 s recompute vs
+    # ~1.9-2.1 s cached reps at sf0.1): the cache materialization jobs
+    # cost more than the doubled codegen shingle scan. The persisted
+    # gram index is the real no-rescan answer at scale.
+    hg = DD.gram_rows_hashed(
+        d.filter(F.col("source") != BATCH_SOURCE), n=3, id_out="_hid"
+    )
+    hsz = hg.groupBy("_hid").agg(F.count(F.lit(1)).alias("_szh"))
     bg = DD.gram_rows_hashed(
         d.filter(F.col("source") == BATCH_SOURCE), n=3, id_out="_bid"
     )

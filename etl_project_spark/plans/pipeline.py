@@ -490,10 +490,9 @@ def q_incremental_curation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     history corpus's nkey set, quality-gated by the hashed linear
     classifier, then shard-assigned and audited per shard.
 
-    The history side is servable from the persisted canonical-key
-    index (:mod:`etl_project_spark.sources.dedup_index`): a session
-    that ran ``persist_nkey_index`` answers repeat batches without
-    re-canonicalizing history. The streaming twin
+    This query always re-canonicalizes history; the served form, from
+    a persisted canonical-key index handle, is
+    ``q_nkey_indexed_curation_audit``. The streaming twin
     (:mod:`etl_project_spark.streaming.pipeline`) consumes the
     identical static frame; its drained state feeds the SAME
     ``curation_shard_audit`` rollup this plan ends with, so batch and
@@ -505,21 +504,12 @@ def q_incremental_curation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, bigint) feature rows; the audit has ≤ 8 groups. The text
     column never crosses an exchange.
     """
-    from etl_project_spark.sources.dedup_index import (
-        BATCH_SOURCE,
-        load_nkey_index,
-        nkey_index_for,
-    )
+    from etl_project_spark.sources.dedup_index import BATCH_SOURCE
     from etl_project_spark.streaming.pipeline import history_nkey_index
 
     tune_session(spark)
     d = read_table(spark, sf_dir, "documents")
-    idx = nkey_index_for(sf_dir)
-    hist = (
-        load_nkey_index(spark, idx)
-        if idx is not None
-        else history_nkey_index(d.filter(F.col("source") != BATCH_SOURCE))
-    )
+    hist = history_nkey_index(d.filter(F.col("source") != BATCH_SOURCE))
     return _incremental_audit_from_history(spark, sf_dir, hist)
 
 
@@ -527,9 +517,9 @@ def _incremental_audit_from_history(
     spark: SparkSession, sf_dir: str, hist: DataFrame
 ) -> DataFrame:
     """The batch side of the incremental curation audit, parameterized
-    on WHERE the history nkey set comes from (inflight rebuild,
-    registered serving index, or a caller-scoped persisted copy) —
-    one plan body so the three entry points cannot drift."""
+    on WHERE the history nkey set comes from (inflight rebuild, a
+    persisted index, or a persisted index grown by appends) — one
+    plan body so the three entry points cannot drift."""
     from pyspark.sql import Window as W
 
     from etl_project_spark.operators.dedup import canonical_nkey
@@ -579,9 +569,8 @@ def q_nkey_indexed_curation_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     full corpus.
 
     The build is part of the query so the registry entry is
-    self-contained and deterministic; ``register=False`` keeps it
-    caller-scoped so running this query never flips the process-local
-    serving switch under the inflight twin (see
+    self-contained and deterministic; the index handle stays local to
+    the query, so the inflight twin always runs its own plan (see
     ``q_minhash_indexed_pairs``). Same oracle as
     ``q_incremental_curation_audit`` — the persisted frame is written
     by the shared ``history_nkey_index`` builder, so the two paths
@@ -601,7 +590,7 @@ def q_nkey_indexed_curation_audit(spark: SparkSession, sf_dir: str) -> DataFrame
 
     tune_session(spark)
     path = query_scoped_index_dir("nkey", sf_dir)
-    idx = persist_nkey_index(spark, sf_dir, path=path, register=False)
+    idx = persist_nkey_index(spark, sf_dir, path=path)
     return _incremental_audit_from_history(
         spark, sf_dir, load_nkey_index(spark, idx)
     )
@@ -649,9 +638,7 @@ def q_nkey_index_append_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     older = d.filter(
         (F.col("source") != BATCH_SOURCE) & (F.col("source") != "src18")
     )
-    idx = persist_nkey_index(
-        spark, sf_dir, path=path, register=False, docs=older
-    )
+    idx = persist_nkey_index(spark, sf_dir, path=path, docs=older)
     append_nkey_index(spark, sf_dir, idx, batch_source="src18")
     return _incremental_audit_from_history(
         spark, sf_dir, load_nkey_index(spark, idx)

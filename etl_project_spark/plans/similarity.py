@@ -312,23 +312,19 @@ def q_knn_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed path must return bit-identical results to the in-flight
     path, so one SQL twin checks both.
 
-    The index lands in a per-process unique temp dir: a path shared
-    across processes raced (one session's overwrite deleting
-    part-files under another's probe scan). The few-MB leak per
-    process is bounded (one dir per (pid, sf)) and lives under the
-    OS-reaped /tmp.
+    The index lands in a per-(process, corpus-abspath) unique temp dir
+    (``query_scoped_index_dir``): a path shared across processes raced
+    (one session's overwrite deleting part-files under another's probe
+    scan), and so did a path keyed by the corpus basename alone (two
+    corpora named ``sf`` under different parents). The few-MB leak per
+    (pid, corpus) is bounded and lives under the OS-reaped /tmp.
     """
-    import os as _os
-    import tempfile as _tempfile
+    from etl_project_spark.sources.dedup_index import query_scoped_index_dir
 
     tune_session(spark)
     e = read_table(spark, sf_dir, "embeddings")
     cents = SIM.deterministic_centroids(e, "embedding", "vec_id", n_cells=16)
-    path = _os.path.join(
-        _tempfile.gettempdir(),
-        f"etl_project_spark_ivf_{_os.getpid()}",
-        _os.path.basename(sf_dir.rstrip("/")) or "sf",
-    )
+    path = query_scoped_index_dir("ivf", sf_dir)
     SIM.ivf_write_index(e, "embedding", cents, path, id_col="vec_id")
     return SIM.ivf_topk_indexed(
         spark, path, "embedding", QUERY_VEC, cents, k=10, id_col="vec_id", n_probe=4
@@ -384,19 +380,14 @@ def q_knn_ivf_appended_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same per-(process, corpus) temp-dir + self-contained-build
     contract as the indexed twin.
     """
-    import os as _os
-    import tempfile as _tempfile
+    from etl_project_spark.sources.dedup_index import query_scoped_index_dir
 
     tune_session(spark)
     e = read_table(spark, sf_dir, "embeddings")
     hist = e.filter(F.col("vec_id") % 10 != 3)
     batch = e.filter(F.col("vec_id") % 10 == 3)
     cents = SIM.deterministic_centroids(hist, "embedding", "vec_id", n_cells=16)
-    path = _os.path.join(
-        _tempfile.gettempdir(),
-        f"etl_project_spark_ivf_app_{_os.getpid()}",
-        _os.path.basename(sf_dir.rstrip("/")) or "sf",
-    )
+    path = query_scoped_index_dir("ivf_append", sf_dir)
     SIM.ivf_write_index(hist, "embedding", cents, path, id_col="vec_id")
     SIM.ivf_append_index(batch, "embedding", cents, path, id_col="vec_id")
     return SIM.ivf_topk_indexed(
@@ -764,18 +755,9 @@ FROM codes GROUP BY s
 
 
 def _pq_encoded(spark: SparkSession, sf_dir: str) -> "tuple[DataFrame, object]":
-    # Session-registered persisted index (sources/ann_index.py): serve
-    # the codes from the pay-once parquet instead of re-running the
-    # corpus encode scan. Parameter-matched or not used at all; the
-    # codebook travels with the index so no scan re-derives the seeds.
-    from etl_project_spark.sources.ann_index import pq_index_for, read_pq_codes
-
-    idx = pq_index_for(sf_dir, n_cells=_PQ_KS, n_sub=_PQ_SUB)
-    if idx is not None:
-        return (
-            read_pq_codes(spark, idx).select("vec_id", "_pq"),
-            SIM.pq_codebooks(idx.seeds, _PQ_SUB),
-        )
+    """The corpus encode: one Arrow scan yielding ``(vec_id, _pq)``,
+    plus the codebooks it encoded against. The served form, from a
+    persisted code index handle, is ``q_pq_adc_indexed_topk``."""
     e = read_table(spark, sf_dir, "embeddings")
     seeds = SIM.deterministic_centroids(e, "embedding", "vec_id", n_cells=_PQ_KS)
     cbs = SIM.pq_codebooks(seeds, _PQ_SUB)
@@ -862,21 +844,23 @@ def q_pq_adc_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path must return bit-identical results to the encode-per-query
     path, so one SQL twin checks both — and the serving scan touches 8
     int codes per vector instead of 64 floats, the 100 TB residency
-    win quantization exists for. The build lands in a per-process
-    unique dir (shared paths raced across sessions; bounded few-MB
-    leak under OS-reaped /tmp). ``register=False``: running this query
-    must not flip the OTHER PQ queries into served mode.
+    win quantization exists for. The build lands in a
+    per-(process, corpus-abspath) unique dir (``query_scoped_index_dir``;
+    shared paths raced across sessions; bounded few-MB leak under
+    OS-reaped /tmp), and its handle stays local to this query.
     """
     from etl_project_spark.sources.ann_index import (
         persist_pq_index,
         read_pq_codes,
     )
+    from etl_project_spark.sources.dedup_index import query_scoped_index_dir
 
     tune_session(spark)
     idx = persist_pq_index(
-        spark, sf_dir, n_cells=_PQ_KS, n_sub=_PQ_SUB, register=False
+        spark, sf_dir, n_cells=_PQ_KS, n_sub=_PQ_SUB,
+        path=query_scoped_index_dir("pq", sf_dir),
     )
-    cbs = SIM.pq_codebooks(idx.seeds, _PQ_SUB)
+    cbs = SIM.pq_codebooks(idx.seeds, idx.n_sub)
     enc = read_pq_codes(spark, idx).select("vec_id", "_pq")
     return _adc_topk(enc, cbs, k=10)
 
@@ -985,20 +969,6 @@ def q_knn_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall vs brute) and q_pq_reconstruction_error (code resolution).
     """
     tune_session(spark)
-    from etl_project_spark.sources.ann_index import (
-        pq_index_for,
-        read_pq_codes_probed,
-    )
-
-    idx = pq_index_for(sf_dir, n_cells=_PQ_KS, n_sub=_PQ_SUB)
-    if idx is not None:
-        # persisted index: probe cells are partition directories, so
-        # the scan opens only 4/16 of the code files and neither the
-        # assignment matmul nor the encode UDF runs at query time.
-        cbs = SIM.pq_codebooks(idx.seeds, _PQ_SUB)
-        probed = SIM.probe_cells(QUERY_VEC, idx.seeds, n_probe=4)
-        enc = read_pq_codes_probed(spark, idx, probed).select("vec_id", "_pq")
-        return _adc_topk(enc, cbs, k=10)
     e = read_table(spark, sf_dir, "embeddings")
     seeds = SIM.deterministic_centroids(e, "embedding", "vec_id", n_cells=_PQ_KS)
     cbs = SIM.pq_codebooks(seeds, _PQ_SUB)
@@ -1525,7 +1495,7 @@ def q_knn_graph_expand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel over <= 1+k+k^2 candidates. The expensive stage is the
     OFFLINE graph build (exact n^2 over the sampled nodes here; at
     100 TB the graph would come from the IVF/LSH candidate generators
-    and persist through the layout registry like sources/ann_index.py
+    and persist as a caller-held index handle, as sources/ann_index.py
     persists PQ codes) — the ONLINE expand+rerank path touches at most
     1 + 8 + 64 vectors regardless of corpus size, which is the point:
     query cost is bounded by graph degree, not corpus mass.

@@ -10,35 +10,30 @@ query from the codes: 64 float dims (256 B) become 8 uint8 codes, so
 the entire index fits in a fraction of the corpus footprint and the
 per-query work is an ADC scan over 8-byte rows.
 
-Mechanism mirrors the bucketed-table layout registry
-(:mod:`etl_project_spark.sources.bucketed`): ``persist_pq_index``
-encodes the corpus once — IVF cell assignment + PQ codes in the same
-scan — and registers the layout in a process-local map keyed by the
-corpus dir; the PQ query builders consult the map and, when the
-registered parameters match, substitute a scan of the persisted codes
-for the encode. Registration is an explicit session opt-in, so the
-driver's correctness runs (no registration) always exercise the
-self-contained path, and parity between the two paths is asserted by
+``persist_pq_index`` encodes the corpus once — IVF cell assignment +
+PQ codes in the same scan — under the caller's ``path`` and returns a
+:class:`PQIndex` handle; a query served from the codes takes that
+handle (``q_pq_adc_indexed_topk``). Nothing is looked up by corpus
+dir, so building an index never changes what the encode-per-query
+forms compute; parity between the two paths is asserted by
 ``tests/test_ann_index.py``.
 
-The index parquet is written ``partitionBy("_cell")``: IVF-PQ probes
-read only their ``n_probe`` cells via planning-time partition pruning
-(the same Hive-style layout as ``ivf_write_index``), and flat ADC
-scans read all cells but only the 8-byte code column — column pruning
-keeps the ``errs`` audit array out of serving scans.
+The index parquet is written ``partitionBy("_cell")``: a consumer that
+filters ``_cell`` on :func:`read_pq_codes` reads only those cells via
+planning-time partition pruning (the same Hive-style layout as
+``ivf_write_index``), and flat ADC scans read all cells but only the
+8-byte code column — column pruning keeps the ``errs`` audit array out
+of serving scans.
 
 Seeds (the coarse centroids, whose slices are the PQ codebooks) are
-index-build metadata — ``n_cells × dim`` floats — and are kept in the
-registry entry itself: consumers must NOT re-derive them with a corpus
-scan (that would pay the scan the index exists to skip), and an index
-served with the wrong codebook is silently garbage, so the codebook
-travels with the codes.
+index-build metadata — ``n_cells × dim`` floats — and are kept on the
+handle: consumers must NOT re-derive them with a corpus scan (that
+would pay the scan the index exists to skip), and an index served with
+the wrong codebook is silently garbage, so the codebook travels with
+the codes.
 """
 
 from __future__ import annotations
-
-import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,45 +53,21 @@ class PQIndex:
         self.n_sub = n_sub
 
 
-#: (abs sf_dir) -> PQIndex for that corpus' embeddings table.
-_PQ_LAYOUT: dict[str, PQIndex] = {}
-
-
-def register_pq_index(sf_dir: str, index: PQIndex) -> None:
-    _PQ_LAYOUT[os.path.abspath(sf_dir)] = index
-
-
-def clear_pq_index() -> None:
-    _PQ_LAYOUT.clear()
-
-
-def pq_index_for(sf_dir: str, *, n_cells: int, n_sub: int) -> PQIndex | None:
-    """The registered index, ONLY if its build parameters match the
-    query's — codes encoded under a different codebook are not an
-    answer, they are a wrong answer, so a parameter mismatch means
-    "no index" rather than "close enough"."""
-    idx = _PQ_LAYOUT.get(os.path.abspath(sf_dir))
-    if idx is not None and idx.n_cells == n_cells and idx.n_sub == n_sub:
-        return idx
-    return None
-
-
 def persist_pq_index(
     spark: SparkSession,
     sf_dir: str,
     *,
     n_cells: int = 16,
     n_sub: int = 8,
-    path: str | None = None,
-    register: bool = True,
+    path: str,
 ) -> PQIndex:
-    """Build and register the persisted index: ONE Arrow scan computes
+    """Build the persisted index under ``path``: ONE Arrow scan computes
     the IVF cell assignment and the PQ codes together, written as
     parquet partitioned by ``_cell``.
 
     This is the pay-once write (at 100 TB: the final stage of embedding
-    ingest); every subsequent ADC / IVF-PQ query in the session skips
-    the encode scan entirely. Returns the registered handle.
+    ingest); every ADC query handed the returned handle skips the
+    encode scan entirely.
     """
     from etl_project_spark.catalog import read_table
     from etl_project_spark.operators import similarity as SIM
@@ -104,29 +75,13 @@ def persist_pq_index(
     e = read_table(spark, sf_dir, "embeddings")
     seeds = SIM.deterministic_centroids(e, "embedding", "vec_id", n_cells=n_cells)
     cbs = SIM.pq_codebooks(seeds, n_sub)
-    if path is None:
-        # per-process unique dir: a shared path raced across sessions
-        # (one overwrite deleting part-files under another's scan) —
-        # same isolation rule as q_knn_ivf_indexed_topk's index dir.
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"etl_project_spark_pq_{os.getpid()}",
-            os.path.basename(os.path.abspath(sf_dir)) or "sf",
-        )
     enc = SIM.ivf_assign(e, "embedding", seeds).select(
         "vec_id",
         "_cell",
         SIM.pq_encode_udf(cbs)(F.col("embedding")).alias("_pq"),
     )
     enc.write.partitionBy("_cell").mode("overwrite").parquet(path)
-    idx = PQIndex(path, seeds, n_cells, n_sub)
-    if register:
-        # session opt-in: route every PQ builder for this sf_dir to the
-        # codes. register=False builds a handle without the global side
-        # effect — what a registry query embedding its own index build
-        # must use, so running it never flips OTHER queries' paths.
-        register_pq_index(sf_dir, idx)
-    return idx
+    return PQIndex(path, seeds, n_cells, n_sub)
 
 
 def read_pq_codes(spark: SparkSession, idx: PQIndex) -> DataFrame:
@@ -135,14 +90,3 @@ def read_pq_codes(spark: SparkSession, idx: PQIndex) -> DataFrame:
     ``_cell`` comes back from the partition directory values; column
     pruning drops ``_pq.errs`` when the consumer only scores."""
     return spark.read.parquet(idx.path)
-
-
-def read_pq_codes_probed(
-    spark: SparkSession, idx: PQIndex, cells: list[int]
-) -> DataFrame:
-    """Codes of the probed cells only — the filter lands on the
-    ``_cell=N/`` partition directories, so unprobed cells are never
-    opened (planning-time partition pruning)."""
-    return spark.read.parquet(idx.path).filter(
-        F.col("_cell").isin([int(c) for c in cells])
-    )

@@ -1,4 +1,4 @@
-"""Persisted near-dup serving indexes for the documents table — the
+"""Persisted near-dup indexes for the documents table — the
 amortization layer the one-shot dedup queries lack (round-12 verdict
 task #7).
 
@@ -11,21 +11,16 @@ topology changes far more slowly than the arriving batches. A real
 subsequent batch from the persisted index — the same asymmetric
 economics as the PQ/IVF layer (:mod:`etl_project_spark.sources.ann_index`).
 
-Mechanism mirrors ``ann_index``: ``persist_gram_index`` /
-``persist_simhash_index`` build the frame once with THE shared builder
-(so served and inflight rows are definitionally identical), write it to
-parquet, and register the handle in one process-local map keyed by
-(family, corpus dir); a lookup serves it only when its build parameters
-match. Consumers (the batch incremental plan,
-or a caller wiring up the streaming twins) ask ``*_index_for`` and fall
-back to the inflight builder when nothing matches. Registration is an
-explicit session opt-in, so the driver's correctness runs (no
-registration) always exercise the self-contained path; parity between
-the two paths is asserted by ``tests/test_dedup_index.py``.
-
-A parameter mismatch means "no index", never "close enough": grams
-hashed at a different ``n`` (or postings built for a different Hamming
-budget / block split) are not an answer, they are a wrong answer.
+Every index is a handle the caller holds: ``persist_*_index`` builds
+the frame once with THE shared builder (so persisted and inflight rows
+are definitionally identical), writes it under the caller's ``path``
+and returns the handle; ``load_*_index`` reads it back, and the
+append/delete/compact functions maintain it in place. Nothing is
+looked up by corpus dir, so a persisted index never changes what
+another query computes: the registry queries that serve from an index
+build one in a ``query_scoped_index_dir`` and pass its handle, and
+the inflight queries always run their self-contained plan. Parity
+between the two is asserted by ``tests/test_dedup_index.py``.
 
 Every persisted frame of the four families is one :class:`IndexTable`
 — the single owner of write, append, read, retract and compact. The
@@ -233,18 +228,13 @@ class IndexTable:
 
 class _Handle:
     """What every family handle shares: its :class:`IndexTable` frames,
-    and ``owns_path`` — True when the module allocated the build's temp
-    directory itself (caller passed ``path=None``); such directories
-    are deleted when the registry entry is replaced or cleared, so
-    repeat rebuilds in a long-lived session cannot accumulate orphaned
-    parquet dirs. Caller-supplied paths are never deleted (the caller
-    owns them)."""
+    all under the directory the caller passed to the build (the caller
+    owns it; nothing here deletes it)."""
 
-    __slots__ = ("tables", "owns_path")
+    __slots__ = ("tables",)
 
-    def __init__(self, *tables: IndexTable, owns_path: bool = False) -> None:
+    def __init__(self, *tables: IndexTable) -> None:
         self.tables = tables
-        self.owns_path = owns_path
 
     @property
     def path(self) -> str:
@@ -257,8 +247,8 @@ class GramIndex(_Handle):
 
     __slots__ = ("n",)
 
-    def __init__(self, path: str, n: int, owns_path: bool = False) -> None:
-        super().__init__(IndexTable(path), owns_path=owns_path)
+    def __init__(self, path: str, n: int) -> None:
+        super().__init__(IndexTable(path))
         self.n = n
 
     @property
@@ -271,14 +261,8 @@ class SimHashIndex(_Handle):
 
     __slots__ = ("max_hamming", "eq_blocks")
 
-    def __init__(
-        self,
-        path: str,
-        max_hamming: int,
-        eq_blocks: int,
-        owns_path: bool = False,
-    ) -> None:
-        super().__init__(IndexTable(path), owns_path=owns_path)
+    def __init__(self, path: str, max_hamming: int, eq_blocks: int) -> None:
+        super().__init__(IndexTable(path))
         self.max_hamming = max_hamming
         self.eq_blocks = eq_blocks
 
@@ -321,13 +305,11 @@ class MinHashIndex(_Handle):
         n_hashes: int,
         shingle_k: int,
         use_token_ngrams: bool,
-        owns_path: bool = False,
         n_buckets: int = 0,
     ) -> None:
         super().__init__(
             IndexTable(sig_path),
             IndexTable(rows_path, "_id" if n_buckets else None, n_buckets),
-            owns_path=owns_path,
         )
         self.n_hashes = n_hashes
         self.shingle_k = shingle_k
@@ -385,11 +367,8 @@ class NkeyIndex(_Handle):
 
     __slots__ = ()
 
-    def __init__(self, path: str, owns_path: bool = False, n_buckets: int = 0) -> None:
-        super().__init__(
-            IndexTable(path, "nkey" if n_buckets else None, n_buckets),
-            owns_path=owns_path,
-        )
+    def __init__(self, path: str, n_buckets: int = 0) -> None:
+        super().__init__(IndexTable(path, "nkey" if n_buckets else None, n_buckets))
 
     @property
     def ledger(self) -> IndexTable:
@@ -419,39 +398,6 @@ def query_scoped_index_dir(kind: str, sf_dir: str) -> str:
     )
 
 
-#: The serving registry: one handle per (family, absolute corpus dir).
-_INDEXES: dict[tuple[type, str], _Handle] = {}
-
-
-def _drop(idx: _Handle | None) -> None:
-    """Delete a module-owned index directory (no-op for caller paths)."""
-    if idx is not None and idx.owns_path:
-        shutil.rmtree(os.path.dirname(idx.path), ignore_errors=True)
-
-
-def _register(idx: _Handle, sf_dir: str) -> None:
-    """Serve ``idx`` for ``sf_dir``; a rebuild reaps the module-owned
-    dir of the handle it replaces."""
-    key = (type(idx), os.path.abspath(sf_dir))
-    _drop(_INDEXES.get(key))
-    _INDEXES[key] = idx
-
-
-def _lookup(family: type, sf_dir: str, **params) -> _Handle | None:
-    """The registered ``family`` handle for ``sf_dir`` if every build
-    parameter matches, else None."""
-    idx = _INDEXES.get((family, os.path.abspath(sf_dir)))
-    if idx is not None and all(getattr(idx, k) == v for k, v in params.items()):
-        return idx
-    return None
-
-
-def clear_dedup_indexes() -> None:
-    for idx in _INDEXES.values():
-        _drop(idx)
-    _INDEXES.clear()
-
-
 def _history_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_project_spark.catalog import read_table
 
@@ -471,22 +417,18 @@ def _batch_docs(spark: SparkSession, sf_dir: str, batch_source: str) -> DataFram
 
 
 def persist_gram_index(
-    spark: SparkSession, sf_dir: str, *, n: int = 3, path: str | None = None
+    spark: SparkSession, sf_dir: str, *, n: int = 3, path: str
 ) -> GramIndex:
     """Build the history gram inverted index ``(_hid, _szh, _g)`` once
     (``history_gram_index``'s codegen row form over every non-batch
-    source), write it to parquet, and register it for ``sf_dir``."""
+    source) and write it under ``path``. The returned handle is the
+    static side of ``stream_incremental_dedup_scores`` via
+    :func:`load_gram_index`."""
     from etl_project_spark.streaming.dedup import history_gram_index
 
-    owns, path = path is None, path or tempfile.mkdtemp(prefix="gram_index_")
-    idx = GramIndex(os.path.join(path, f"grams_n{n}"), n, owns_path=owns)
+    idx = GramIndex(os.path.join(path, f"grams_n{n}"), n)
     idx.grams.write(history_gram_index(_history_docs(spark, sf_dir), n=n))
-    _register(idx, sf_dir)
     return idx
-
-
-def gram_index_for(sf_dir: str, *, n: int) -> GramIndex | None:
-    return _lookup(GramIndex, sf_dir, n=n)
 
 
 def load_gram_index(spark: SparkSession, idx: GramIndex) -> DataFrame:
@@ -499,24 +441,20 @@ def persist_simhash_index(
     *,
     max_hamming: int = 3,
     eq_blocks: int = 2,
-    path: str | None = None,
-    register: bool = True,
+    path: str,
     docs: DataFrame | None = None,
 ) -> SimHashIndex:
     """Build the history SimHash posting index ``(_hid, _hsim, _cmask,
-    _key)`` once (the shared ``history_simhash_index`` layout), write it
-    to parquet, and register it for ``sf_dir``.
+    _key)`` once (the shared ``history_simhash_index`` layout) and
+    write it under ``path``.
 
-    ``docs`` overrides the indexed corpus (default: ``_history_docs``);
-    a partial corpus should pass ``register=False`` — see
-    :func:`persist_minhash_index` for the contract. Partial builds are
-    grown with :func:`append_simhash_index`."""
+    ``docs`` overrides the indexed corpus (default: ``_history_docs``).
+    Partial builds are grown with :func:`append_simhash_index`."""
     from etl_project_spark.streaming.dedup import history_simhash_index
 
-    owns, path = path is None, path or tempfile.mkdtemp(prefix="simhash_index_")
     idx = SimHashIndex(
         os.path.join(path, f"postings_h{max_hamming}b{eq_blocks}"),
-        max_hamming, eq_blocks, owns_path=owns,
+        max_hamming, eq_blocks,
     )
     idx.postings.write(
         history_simhash_index(
@@ -525,8 +463,6 @@ def persist_simhash_index(
             eq_blocks=eq_blocks,
         )
     )
-    if register:  # see persist_minhash_index: False = caller-scoped build
-        _register(idx, sf_dir)
     return idx
 
 
@@ -566,14 +502,6 @@ def append_simhash_index(
     return idx
 
 
-def simhash_index_for(
-    sf_dir: str, *, max_hamming: int, eq_blocks: int
-) -> SimHashIndex | None:
-    return _lookup(
-        SimHashIndex, sf_dir, max_hamming=max_hamming, eq_blocks=eq_blocks
-    )
-
-
 def load_simhash_index(spark: SparkSession, idx: SimHashIndex) -> DataFrame:
     return idx.postings.read(spark)
 
@@ -585,36 +513,40 @@ def persist_minhash_index(
     n_hashes: int = 64,
     shingle_k: int = 3,
     use_token_ngrams: bool = True,
-    path: str | None = None,
-    register: bool = True,
+    path: str,
     docs: DataFrame | None = None,
+    register: bool = False,
 ) -> MinHashIndex:
     """Pay the MinHash signing pass once for the FULL documents corpus
     at ``sf_dir``: write the signature frame and the distinct
     hashed-gram rows (built by the SAME ``minhash_sig_rows`` the
-    inflight plan uses) to parquet and register them. Repeat near-dup
-    sweeps then skip the shingle explode + 64-way min aggregation —
-    the dominant cost of ``q_minhash_near_dup_pairs`` (the #1 sf10
-    in-sweep cost, 394–454 s, re-signed on every run before this).
+    inflight plan uses) under ``path``. Sweeps that pass the returned
+    handle (``signed=load_minhash_index(...)``) then skip the shingle
+    explode + 64-way min aggregation — the dominant cost of
+    ``q_minhash_near_dup_pairs`` (the #1 sf10 in-sweep cost, 394–454 s,
+    re-signed on every run before this).
 
     ``docs`` overrides the signed corpus (default: the full documents
     table at ``sf_dir``) — the incremental topology builds the index
     over HISTORY only (``_history_docs``) and then grows it with
-    :func:`append_minhash_index`. A caller-supplied ``docs`` that is
-    not the full corpus should pass ``register=False``: the registry
-    key is the corpus dir, and serving consumers assume a registered
-    index covers it entirely."""
+    :func:`append_minhash_index`.
+
+    ``register`` is a compatibility shim and accepts only ``False``:
+    there is no serving registry (an index travels by its handle), but
+    the benchmark harness (``perfbench/index_ingest.py``) passes
+    ``register=False``, so the keyword stays for it."""
     from etl_project_spark.catalog import read_table
     from etl_project_spark.operators.dedup import (
         minhash_sig_from_rows,
         minhash_sig_rows,
     )
 
-    owns, path = path is None, path or tempfile.mkdtemp(prefix="minhash_index_")
+    if register is not False:
+        raise ValueError("persist_minhash_index: register must be False")
     tag = f"nh{n_hashes}_k{shingle_k}_{'tok' if use_token_ngrams else 'char'}"
     idx = MinHashIndex(
         os.path.join(path, f"sig_{tag}"), os.path.join(path, f"grams_{tag}"),
-        n_hashes, shingle_k, use_token_ngrams, owns_path=owns,
+        n_hashes, shingle_k, use_token_ngrams,
         n_buckets=spark.sparkContext.defaultParallelism,
     )
     _, rows = minhash_sig_rows(
@@ -643,23 +575,7 @@ def persist_minhash_index(
     # with the bucketed layout the groupBy(_id) now runs with zero
     # exchanges.
     idx.sig.write(minhash_sig_from_rows(idx.rows.read(spark), n_hashes=n_hashes))
-    # register=False builds a caller-scoped index WITHOUT flipping the
-    # process-local serving switch: the indexed registry query uses it
-    # so running it can never silently convert the inflight query's
-    # next run (same session, e.g. mid-sweep) into a served run —
-    # that would corrupt the inflight timing series, not its answer.
-    if register:
-        _register(idx, sf_dir)
     return idx
-
-
-def minhash_index_for(
-    sf_dir: str, *, n_hashes: int, shingle_k: int, use_token_ngrams: bool
-) -> MinHashIndex | None:
-    return _lookup(
-        MinHashIndex, sf_dir, n_hashes=n_hashes, shingle_k=shingle_k,
-        use_token_ngrams=use_token_ngrams,
-    )
 
 
 def load_minhash_index(
@@ -916,42 +832,32 @@ def persist_nkey_index(
     spark: SparkSession,
     sf_dir: str,
     *,
-    path: str | None = None,
-    register: bool = True,
+    path: str,
     docs: DataFrame | None = None,
 ) -> NkeyIndex:
     """Write the history corpus's canonical-key owner-count ledger
-    (``(nkey, _n)`` — see :class:`NkeyIndex` for the format) and
-    register it for ``sf_dir`` — the static side of the incremental
-    curation dedup. The canonicalization is the shared
-    ``canonical_nkey`` expression, so the folded set is definitionally
-    ``history_nkey_index`` over the same docs.
+    (``(nkey, _n)`` — see :class:`NkeyIndex` for the format) under
+    ``path`` — the static side of the incremental curation dedup. The
+    canonicalization is the shared ``canonical_nkey`` expression, so
+    the folded set is definitionally ``history_nkey_index`` over the
+    same docs.
 
-    ``docs`` overrides the indexed corpus (default: ``_history_docs``);
-    a partial corpus should pass ``register=False`` — see
-    :func:`persist_minhash_index` for the contract. Partial builds are
-    grown with :func:`append_nkey_index` and shrunk with
-    :func:`delete_from_nkey_index`."""
-    owns, path = path is None, path or tempfile.mkdtemp(prefix="nkey_index_")
+    ``docs`` overrides the indexed corpus (default: ``_history_docs``).
+    Partial builds are grown with :func:`append_nkey_index` and shrunk
+    with :func:`delete_from_nkey_index`."""
     # nkey-BUCKETED ledger (r18, VERDICT r17 #4): the live-set fold
     # (groupBy nkey) and the consumers' anti-joins cluster on nkey, so
     # the bucketed scan serves them exchange-free — the layout
     # load_nkey_index's docstring always named as the production
     # shape, now actually written.
     idx = NkeyIndex(
-        os.path.join(path, "nkeys"), owns_path=owns,
+        os.path.join(path, "nkeys"),
         n_buckets=spark.sparkContext.defaultParallelism,
     )
     idx.ledger.write(
         _nkey_ledger(_history_docs(spark, sf_dir) if docs is None else docs)
     )
-    if register:  # see persist_minhash_index: False = caller-scoped build
-        _register(idx, sf_dir)
     return idx
-
-
-def nkey_index_for(sf_dir: str) -> NkeyIndex | None:
-    return _lookup(NkeyIndex, sf_dir)
 
 
 def _nkey_ledger(docs: DataFrame) -> DataFrame:

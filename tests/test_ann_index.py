@@ -1,79 +1,55 @@
-"""Persisted PQ/IVF-PQ index (sources/ann_index.py): serving from the
-pay-once codes must (a) return bit-identical results to the
-self-contained encode-per-query path, (b) actually skip the encode —
-no Python/Arrow eval in the served plan — and (c) prune unprobed cells
-at planning time for IVF-PQ."""
+"""Persisted PQ index (sources/ann_index.py): serving ADC from the
+pay-once codes through the index handle must (a) return bit-identical
+results to the self-contained encode-per-query path and (b) actually
+skip the encode — no Python/Arrow eval in the served plan. Also the
+IVF index's append, drift repair and per-corpus index directories."""
 
 from __future__ import annotations
 
-import pytest
+import os
 
 from etl_project_spark.plans.registry import all_specs
-from etl_project_spark.sources import ann_index as AX
-from tests.conftest import SF_ORACLE
-
-PQ_QUERIES = ("q_pq_adc_topk", "q_pq_reconstruction_error", "q_knn_ivfpq_topk")
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
-@pytest.fixture()
-def pq_index(spark, tmp_path):
-    idx = AX.persist_pq_index(
-        spark, SF_ORACLE, path=str(tmp_path / "pq_index")
-    )
-    yield idx
-    AX.clear_pq_index()
+def _run(spark, name, sf_dir=SF_ORACLE):
+    return [tuple(r) for r in all_specs()[name].builder(spark, sf_dir).collect()]
 
 
-def _run(spark, name):
-    return [tuple(r) for r in all_specs()[name].builder(spark, SF_ORACLE).collect()]
-
-
-@pytest.mark.parametrize("name", PQ_QUERIES)
-def test_served_results_match_selfcontained(spark, tmp_path, name):
-    AX.clear_pq_index()  # belt-and-braces: no stale registration
-    want = _run(spark, name)
-    idx = AX.persist_pq_index(spark, SF_ORACLE, path=str(tmp_path / "pq"))
-    try:
-        assert AX.pq_index_for(SF_ORACLE, n_cells=idx.n_cells, n_sub=idx.n_sub)
-        got = _run(spark, name)
-    finally:
-        AX.clear_pq_index()
+def test_served_results_match_selfcontained(spark):
+    """q_pq_adc_indexed_topk (build the code index, score from its
+    handle) must equal q_pq_adc_topk (encode per query) row for row."""
+    want = _run(spark, "q_pq_adc_topk")
+    got = _run(spark, "q_pq_adc_indexed_topk")
     assert got == want and len(got) > 0
 
 
-def test_served_plan_runs_no_python_eval(spark, pq_index):
-    """The encode UDF (ArrowEvalPython) must be absent from every
-    served plan — that scan is exactly what the index amortizes."""
-    for name in PQ_QUERIES:
-        df = all_specs()[name].builder(spark, SF_ORACLE)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "EvalPython" not in plan and "PythonUDF" not in plan, name
+def test_served_plan_runs_no_python_eval(spark):
+    """The encode UDF (ArrowEvalPython) must be absent from the served
+    plan — that scan is exactly what the index amortizes."""
+    df = all_specs()["q_pq_adc_indexed_topk"].builder(spark, SF_ORACLE)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan and "PythonUDF" not in plan
+    # guard against plan-string drift: the encode-per-query plan has it
+    selfcontained = all_specs()["q_pq_adc_topk"].builder(spark, SF_ORACLE)
+    assert "EvalPython" in selfcontained._jdf.queryExecution().executedPlan().toString()
 
 
-def test_ivfpq_scan_prunes_unprobed_cells(spark, pq_index):
-    """IVF-PQ over the index must touch only the probed cells'
-    partition directories: the optimized plan's file-source scan
-    carries a _cell partition filter."""
-    df = all_specs()["q_knn_ivfpq_topk"].builder(spark, SF_ORACLE)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "_cell" in plan
-    executed = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [_cell" in executed.replace("\n", " ") or (
-        "_cell" in executed and "PartitionFilters" in executed
-    )
-
-
-def test_parameter_mismatch_disables_index(spark, pq_index):
-    """Codes built under a different codebook are a wrong answer, not a
-    fallback: mismatched params must resolve to 'no index'."""
-    assert AX.pq_index_for(SF_ORACLE, n_cells=pq_index.n_cells, n_sub=4) is None
-    assert AX.pq_index_for(SF_ORACLE, n_cells=99, n_sub=pq_index.n_sub) is None
-    assert (
-        AX.pq_index_for(
-            SF_ORACLE, n_cells=pq_index.n_cells, n_sub=pq_index.n_sub
-        )
-        is pq_index
-    )
+def test_ivf_index_dir_is_per_corpus_path(spark, tmp_path):
+    """Two corpora that share a basename must not share an index dir:
+    build q_knn_ivf_indexed_topk over ``a/sf`` (-> sf0.01), then over
+    ``b/sf`` (-> sf0.001), then collect the first frame — it must
+    still read its own index and equal a fresh run."""
+    first_sf, second_sf = tmp_path / "a" / "sf", tmp_path / "b" / "sf"
+    for link, target in ((first_sf, SF_ORACLE), (second_sf, SF_SMOKE)):
+        link.parent.mkdir()
+        os.symlink(target, link)
+    q = all_specs()["q_knn_ivf_indexed_topk"].builder
+    first = q(spark, str(first_sf))
+    q(spark, str(second_sf))
+    got = [tuple(r) for r in first.collect()]
+    assert got == _run(spark, "q_knn_ivf_indexed_topk", str(first_sf))
+    assert len(got) == 10
 
 
 # -- round-17: IVF append + drift-aware rebalance ---------------------------

@@ -1,8 +1,8 @@
-"""Persisted dedup serving indexes (sources/dedup_index.py): serving
-from the pay-once gram / SimHash-posting parquet must (a) return
-row-identical results to the self-contained shingle-per-run path,
-(b) actually skip the history document scan in the served plan, and
-(c) refuse to serve under mismatched build parameters."""
+"""Persisted dedup indexes (sources/dedup_index.py): serving from the
+pay-once gram / SimHash / MinHash / nkey parquet, through the handle
+the build returns, must (a) return row-identical results to the
+self-contained per-run path and (b) actually skip the history document
+scan in the served plan."""
 
 from __future__ import annotations
 
@@ -13,68 +13,54 @@ from etl_project_spark.sources import dedup_index as DX
 from tests.conftest import SF_ORACLE
 
 
-@pytest.fixture()
-def gram_index(spark, tmp_path):
-    idx = DX.persist_gram_index(spark, SF_ORACLE, path=str(tmp_path / "gidx"))
-    yield idx
-    DX.clear_dedup_indexes()
+def _history_grams(spark):
+    from etl_project_spark.streaming.dedup import history_gram_index
 
-
-def _run_incremental(spark):
-    return sorted(
-        tuple(r)
-        for r in all_specs()["q_incremental_dedup_new_batch"]
-        .builder(spark, SF_ORACLE)
-        .collect()
-    )
+    return history_gram_index(DX._history_docs(spark, SF_ORACLE), n=3)
 
 
 def test_gram_index_served_equals_inflight(spark, tmp_path):
-    DX.clear_dedup_indexes()
-    inflight = _run_incremental(spark)
-    DX.persist_gram_index(spark, SF_ORACLE, path=str(tmp_path / "gidx"))
-    try:
-        served = _run_incremental(spark)
-    finally:
-        DX.clear_dedup_indexes()
+    """The persisted gram rows must equal the inflight
+    history_gram_index frame exactly, so a stream served from parquet
+    joins the identical static side."""
+    inflight = sorted(tuple(r) for r in _history_grams(spark).collect())
+    idx = DX.persist_gram_index(spark, SF_ORACLE, path=str(tmp_path / "gidx"))
+    served = sorted(tuple(r) for r in DX.load_gram_index(spark, idx).collect())
     assert served == inflight and inflight
 
 
-def test_gram_index_served_plan_skips_history_scan(spark, gram_index):
-    """With the index registered, the plan must read the documents
-    table only for the BATCH side (source = src19 scans: the gram side
-    and the emit-every-doc id side) — the history grams come from the
-    index parquet, so no history-predicate scan survives."""
+def test_gram_index_served_plan_skips_history_scan(spark, tmp_path):
+    """Fed the persisted gram index, the incremental scoring plan must
+    read the documents table only for the BATCH side — the history
+    grams come from the index parquet, so no history-predicate scan
+    survives."""
+    from pyspark.sql import functions as F
+
+    from etl_project_spark.catalog import read_table
+    from etl_project_spark.streaming.dedup import stream_incremental_dedup_scores
+
     # a cached `documents` relation from another module would replace
     # the parquet scans with InMemoryTableScan and hide PushedFilters
     spark.catalog.clearCache()
-    df = all_specs()["q_incremental_dedup_new_batch"].builder(spark, SF_ORACLE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # the persisted index is in the plan as TWO column-pruned scans —
-    # grams (_hid,_g) for the probe join, sizes (_hid,_szh) for the
-    # post-agg join (plan strings truncate paths, so match ReadSchema)
-    assert "struct<_hid:bigint,_g:bigint>" in plan
-    assert "struct<_hid:bigint,_szh:bigint>" in plan
+    new = read_table(spark, SF_ORACLE, "documents").filter(
+        F.col("source") == DX.BATCH_SOURCE
+    )
+    idx = DX.persist_gram_index(spark, SF_ORACLE, path=str(tmp_path / "gidx"))
+
+    def plan(history_index):
+        df = stream_incremental_dedup_scores(new, history_index)
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    served = plan(DX.load_gram_index(spark, idx))
+    # the persisted index is in the plan as a scan of its own columns
+    # (plan strings truncate paths, so match ReadSchema)
+    assert "struct<_hid:bigint,_szh:bigint,_g:bigint>" in served
     # every remaining documents scan is batch-side: the history
     # predicate (source != src19) appears in NO pushed filter
-    assert "Not(EqualTo(source" not in plan
-    # and without the index the history scan IS there (guards the
+    assert "Not(EqualTo(source" not in served
+    # and fed the inflight index the history scan IS there (guards the
     # assertion itself against filter-string drift)
-    DX.clear_dedup_indexes()
-    inflight_plan = (
-        all_specs()["q_incremental_dedup_new_batch"]
-        .builder(spark, SF_ORACLE)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Not(EqualTo(source" in inflight_plan
-
-
-def test_gram_index_param_mismatch_refuses(spark, gram_index):
-    assert DX.gram_index_for(SF_ORACLE, n=3) is gram_index
-    assert DX.gram_index_for(SF_ORACLE, n=5) is None
-    assert DX.gram_index_for("/nonexistent", n=3) is None
+    assert "Not(EqualTo(source" in plan(_history_grams(spark))
 
 
 def test_simhash_index_served_equals_inflight(spark, tmp_path):
@@ -96,14 +82,7 @@ def test_simhash_index_served_equals_inflight(spark, tmp_path):
     idx = DX.persist_simhash_index(
         spark, SF_ORACLE, max_hamming=3, eq_blocks=2, path=str(tmp_path / "sidx")
     )
-    try:
-        assert DX.simhash_index_for(SF_ORACLE, max_hamming=3, eq_blocks=2) is idx
-        assert DX.simhash_index_for(SF_ORACLE, max_hamming=2, eq_blocks=2) is None
-        served = sorted(
-            tuple(r) for r in DX.load_simhash_index(spark, idx).collect()
-        )
-    finally:
-        DX.clear_dedup_indexes()
+    served = sorted(tuple(r) for r in DX.load_simhash_index(spark, idx).collect())
     assert served == inflight and inflight
 
 
@@ -132,11 +111,7 @@ def test_simhash_stream_from_persisted_index(spark, tmp_path):
     idx = DX.persist_simhash_index(
         spark, SF_ORACLE, max_hamming=3, eq_blocks=2, path=str(tmp_path / "sidx")
     )
-    try:
-        served = matches(DX.load_simhash_index(spark, idx))
-    finally:
-        DX.clear_dedup_indexes()
-    assert served == inflight
+    assert matches(DX.load_simhash_index(spark, idx)) == inflight
 
 
 def test_gram_builders_row_and_array_forms_agree(spark):
@@ -193,28 +168,6 @@ def test_span_gram_forms_agree(spark):
     assert row == hof and row
 
 
-def test_module_owned_index_dirs_are_reaped(spark, tmp_path):
-    """path=None allocates a temp dir the MODULE owns: rebuilding for
-    the same corpus reaps the replaced directory, and clear deletes the
-    last one — a long-lived session cannot accumulate orphans.
-    Caller-supplied paths are never deleted."""
-    import os
-
-    a = DX.persist_gram_index(spark, SF_ORACLE)  # module-owned
-    dir_a = os.path.dirname(a.path)
-    assert os.path.isdir(dir_a)
-    b = DX.persist_gram_index(spark, SF_ORACLE)  # rebuild, same corpus
-    assert not os.path.isdir(dir_a)              # replaced dir reaped
-    dir_b = os.path.dirname(b.path)
-    DX.clear_dedup_indexes()
-    assert not os.path.isdir(dir_b)              # cleared dir reaped
-
-    mine = str(tmp_path / "caller_owned")
-    c = DX.persist_gram_index(spark, SF_ORACLE, path=mine)
-    DX.clear_dedup_indexes()
-    assert os.path.isdir(os.path.dirname(c.path))  # caller path kept
-
-
 def _run_minhash(spark):
     return sorted(
         tuple(r)
@@ -224,79 +177,10 @@ def _run_minhash(spark):
     )
 
 
-def test_minhash_index_served_equals_inflight(spark, tmp_path):
-    DX.clear_dedup_indexes()
-    inflight = _run_minhash(spark)
-    DX.persist_minhash_index(spark, SF_ORACLE, path=str(tmp_path / "midx"))
-    try:
-        served = _run_minhash(spark)
-    finally:
-        DX.clear_dedup_indexes()
-    assert served == inflight and inflight
-
-
-def test_minhash_index_served_plan_skips_signing_scan(spark, tmp_path):
-    """With the index registered, the near-dup plan must not touch the
-    documents table at all — signatures AND verify grams both come from
-    the persisted parquet, so no text column is read anywhere."""
-    spark.catalog.clearCache()
-    DX.persist_minhash_index(spark, SF_ORACLE, path=str(tmp_path / "midx"))
-    try:
-        plan = (
-            all_specs()["q_minhash_near_dup_pairs"]
-            .builder(spark, SF_ORACLE)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-    finally:
-        DX.clear_dedup_indexes()
-    assert "text:string" not in plan  # no corpus scan survives
-    assert "_h0:bigint" in plan  # signature parquet is the source
-    # guard the assertion against plan-string drift: the inflight plan
-    # DOES scan the text column
-    inflight_plan = (
-        all_specs()["q_minhash_near_dup_pairs"]
-        .builder(spark, SF_ORACLE)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "text:string" in inflight_plan
-
-
-def test_minhash_index_param_mismatch_refuses(spark, tmp_path):
-    idx = DX.persist_minhash_index(spark, SF_ORACLE, path=str(tmp_path / "midx"))
-    try:
-        assert (
-            DX.minhash_index_for(
-                SF_ORACLE, n_hashes=64, shingle_k=3, use_token_ngrams=True
-            )
-            is idx
-        )
-        assert (
-            DX.minhash_index_for(
-                SF_ORACLE, n_hashes=64, shingle_k=5, use_token_ngrams=True
-            )
-            is None
-        )
-        assert (
-            DX.minhash_index_for(
-                "/nonexistent", n_hashes=64, shingle_k=3, use_token_ngrams=True
-            )
-            is None
-        )
-    finally:
-        DX.clear_dedup_indexes()
-
-
 def test_minhash_indexed_query_matches_inflight(spark, tmp_path):
     """q_minhash_indexed_pairs (build-then-serve registry form) must
-    return the inflight pair set row-for-row, its probe plan must not
-    scan the documents text column, and — register=False — running it
-    must NOT flip the process-local serving switch for the inflight
-    twin (the mid-sweep timing-corruption hazard its docstring pins)."""
-    DX.clear_dedup_indexes()
+    return the inflight pair set row-for-row, and its probe plan must
+    not scan the documents text column."""
     spark.catalog.clearCache()
     inflight = _run_minhash(spark)
     df = all_specs()["q_minhash_indexed_pairs"].builder(spark, SF_ORACLE)
@@ -305,21 +189,23 @@ def test_minhash_indexed_query_matches_inflight(spark, tmp_path):
     assert "_h0:bigint" in plan  # signature parquet is the source
     indexed = sorted(tuple(r) for r in df.collect())
     assert indexed == inflight and indexed
-    # caller-scoped build: the registry must still be empty
-    assert (
-        DX.minhash_index_for(
-            SF_ORACLE, n_hashes=64, shingle_k=3, use_token_ngrams=True
+
+
+def test_minhash_register_shim_accepts_only_false(spark, tmp_path):
+    """``register`` survives on persist_minhash_index only for callers
+    that pass ``register=False``; anything else is refused before any
+    index is written."""
+    with pytest.raises(ValueError):
+        DX.persist_minhash_index(
+            spark, SF_ORACLE, path=str(tmp_path / "midx"), register=True
         )
-        is None
-    )
+    assert not (tmp_path / "midx").exists()
 
 
 def test_nkey_indexed_query_matches_inflight(spark, tmp_path):
     """q_nkey_indexed_curation_audit must equal the inflight audit
-    row-for-row, serve history from parquet (no history-predicate
-    documents scan in the plan), and leave the serving registry
-    untouched (register=False)."""
-    DX.clear_dedup_indexes()
+    row-for-row and serve history from parquet (no history-predicate
+    documents scan in the plan)."""
     spark.catalog.clearCache()
     inflight = sorted(
         tuple(r)
@@ -339,7 +225,6 @@ def test_nkey_indexed_query_matches_inflight(spark, tmp_path):
     assert "Not(EqualTo(source" not in plan
     indexed = sorted(tuple(r) for r in df.collect())
     assert indexed == inflight and indexed
-    assert DX.nkey_index_for(SF_ORACLE) is None
 
 
 def test_minhash_append_grown_equals_rebuild(spark, tmp_path):
@@ -350,14 +235,13 @@ def test_minhash_append_grown_equals_rebuild(spark, tmp_path):
     oblivious to how the index was built. Also pins the
     sig-from-distinct-rows equivalence ``minhash_sig_from_rows``'s
     docstring claims (min is duplicate-insensitive)."""
-    DX.clear_dedup_indexes()
     grown = DX.persist_minhash_index(
-        spark, SF_ORACLE, path=str(tmp_path / "hist"), register=False,
+        spark, SF_ORACLE, path=str(tmp_path / "hist"),
         docs=DX._history_docs(spark, SF_ORACLE),
     )
     DX.append_minhash_index(spark, SF_ORACLE, grown)
     full = DX.persist_minhash_index(
-        spark, SF_ORACLE, path=str(tmp_path / "full"), register=False
+        spark, SF_ORACLE, path=str(tmp_path / "full")
     )
     gsig, grows = DX.load_minhash_index(spark, grown)
     fsig, frows = DX.load_minhash_index(spark, full)
@@ -391,9 +275,8 @@ def test_minhash_append_signs_only_batch(spark, tmp_path):
 def test_minhash_append_query_matches_inflight(spark):
     """q_minhash_index_append_pairs (history build + batch append +
     probe) must return the inflight whole-corpus pair set row-for-row,
-    probe from the grown parquet (no text scan in the probe plan), and
-    leave the serving registry untouched (register=False)."""
-    DX.clear_dedup_indexes()
+    and probe from the grown parquet (no text scan in the probe
+    plan)."""
     spark.catalog.clearCache()
     inflight = _run_minhash(spark)
     df = all_specs()["q_minhash_index_append_pairs"].builder(spark, SF_ORACLE)
@@ -402,12 +285,6 @@ def test_minhash_append_query_matches_inflight(spark):
     assert "_h0:bigint" in plan  # signature parquet is the source
     appended = sorted(tuple(r) for r in df.collect())
     assert appended == inflight and appended
-    assert (
-        DX.minhash_index_for(
-            SF_ORACLE, n_hashes=64, shingle_k=3, use_token_ngrams=True
-        )
-        is None
-    )
 
 
 def test_nkey_append_grown_equals_rebuild_and_stays_distinct(spark, tmp_path):
@@ -427,7 +304,7 @@ def test_nkey_append_grown_equals_rebuild_and_stays_distinct(spark, tmp_path):
         (F.col("source") != DX.BATCH_SOURCE) & (F.col("source") != "src18")
     )
     idx = DX.persist_nkey_index(
-        spark, SF_ORACLE, path=str(tmp_path / "nk"), register=False, docs=older
+        spark, SF_ORACLE, path=str(tmp_path / "nk"), docs=older
     )
     DX.append_nkey_index(spark, SF_ORACLE, idx, batch_source="src18")
     full = sorted(
@@ -460,7 +337,7 @@ def test_stream_minhash_index_append_equals_batch_append(spark, tmp_path):
         arriving_dir
     )
     grown = DX.persist_minhash_index(
-        spark, SF_ORACLE, path=str(tmp_path / "hist"), register=False,
+        spark, SF_ORACLE, path=str(tmp_path / "hist"),
         docs=DX._history_docs(spark, SF_ORACLE),
     )
     stream = (
@@ -474,7 +351,7 @@ def test_stream_minhash_index_append_equals_batch_append(spark, tmp_path):
     q.awaitTermination(120)
     assert q.lastProgress is not None and not q.isActive
     full = DX.persist_minhash_index(
-        spark, SF_ORACLE, path=str(tmp_path / "full"), register=False
+        spark, SF_ORACLE, path=str(tmp_path / "full")
     )
     gsig, grows = DX.load_minhash_index(spark, grown)
     fsig, frows = DX.load_minhash_index(spark, full)
@@ -491,7 +368,6 @@ def test_nkey_append_query_matches_inflight(spark):
     src19 audit) must equal the inflight audit row-for-row and serve
     history from the grown parquet (positive anchor: the bare-nkey
     ReadSchema; negative: no history-predicate documents scan)."""
-    DX.clear_dedup_indexes()
     spark.catalog.clearCache()
     inflight = sorted(
         tuple(r)
@@ -505,29 +381,6 @@ def test_nkey_append_query_matches_inflight(spark):
     assert "Not(EqualTo(source" not in plan
     appended = sorted(tuple(r) for r in df.collect())
     assert appended == inflight and appended
-    assert DX.nkey_index_for(SF_ORACLE) is None
-
-
-def test_nkey_index_served_equals_inflight(spark, tmp_path):
-    DX.clear_dedup_indexes()
-
-    def run():
-        return sorted(
-            tuple(r)
-            for r in all_specs()["q_incremental_curation_audit"]
-            .builder(spark, SF_ORACLE)
-            .collect()
-        )
-
-    inflight = run()
-    idx = DX.persist_nkey_index(spark, SF_ORACLE, path=str(tmp_path / "nidx"))
-    try:
-        assert DX.nkey_index_for(SF_ORACLE) is idx
-        assert DX.nkey_index_for("/nonexistent") is None
-        served = run()
-    finally:
-        DX.clear_dedup_indexes()
-    assert served == inflight and inflight
 
 
 # -- round-17: index DELETE (retraction) + compaction -----------------------
@@ -575,7 +428,7 @@ def test_minhash_delete_shrunk_equals_rebuild_minus_tombstones(spark, tmp_path):
     tomb = _tomb_ids(spark)
     assert tomb.count() > 0
     grown = DX.persist_minhash_index(
-        spark, SF_ORACLE, path=str(tmp_path / "hist"), register=False,
+        spark, SF_ORACLE, path=str(tmp_path / "hist"),
         docs=DX._history_docs(spark, SF_ORACLE),
     )
     DX.append_minhash_index(spark, SF_ORACLE, grown)
@@ -586,8 +439,7 @@ def test_minhash_delete_shrunk_equals_rebuild_minus_tombstones(spark, tmp_path):
         tomb.select(F.col("_id").alias("doc_id")), "doc_id", "left_anti"
     )
     rebuilt = DX.persist_minhash_index(
-        spark, SF_ORACLE, path=str(tmp_path / "alive"), register=False,
-        docs=alive,
+        spark, SF_ORACLE, path=str(tmp_path / "alive"), docs=alive,
     )
     gsig, grows = _frames_sorted(spark, grown)
     rsig, rrows = _frames_sorted(spark, rebuilt)
@@ -610,7 +462,7 @@ def test_minhash_delete_rewrites_only_affected_files(spark, tmp_path):
         }
 
     grown = DX.persist_minhash_index(
-        spark, SF_ORACLE, path=str(tmp_path / "hist"), register=False,
+        spark, SF_ORACLE, path=str(tmp_path / "hist"),
         docs=DX._history_docs(spark, SF_ORACLE),
     )
     hist_files = local_files(grown.rows_path)
@@ -636,7 +488,7 @@ def test_minhash_delete_plans_never_read_text(spark, tmp_path):
     (ADVICE r15) guard the negative checks against plan-format
     drift."""
     grown = DX.persist_minhash_index(
-        spark, SF_ORACLE, path=str(tmp_path / "hist"), register=False,
+        spark, SF_ORACLE, path=str(tmp_path / "hist"),
         docs=DX._history_docs(spark, SF_ORACLE),
     )
     DX.append_minhash_index(spark, SF_ORACLE, grown)
@@ -663,14 +515,12 @@ def test_minhash_delete_query_nonvacuous(spark):
     """q_minhash_index_delete_pairs end to end at test SF: the
     post-delete pair set must be non-empty, a STRICT subset of the
     grown (pre-delete) pair set, every removed pair must have a
-    tombstoned member, and no surviving pair may touch a tombstone.
-    Registry stays untouched (register=False)."""
+    tombstoned member, and no surviving pair may touch a tombstone."""
     from pyspark.sql import functions as F
 
     from etl_project_spark.catalog import read_table
     from etl_project_spark.operators.dedup import minhash_near_dup_pairs
 
-    DX.clear_dedup_indexes()
     after = {
         (r.id_a, r.id_b)
         for r in all_specs()["q_minhash_index_delete_pairs"]
@@ -712,12 +562,6 @@ def test_minhash_delete_query_nonvacuous(spark):
     removed = before - after
     assert removed and all(a in tomb or b in tomb for a, b in removed)
     assert all(a not in tomb and b not in tomb for a, b in after)
-    assert (
-        DX.minhash_index_for(
-            SF_ORACLE, n_hashes=64, shingle_k=3, use_token_ngrams=True
-        )
-        is None
-    )
 
 
 def test_minhash_compact_preserves_frames_and_shrinks_files(spark, tmp_path):
@@ -728,7 +572,7 @@ def test_minhash_compact_preserves_frames_and_shrinks_files(spark, tmp_path):
     import os
 
     grown = DX.persist_minhash_index(
-        spark, SF_ORACLE, path=str(tmp_path / "hist"), register=False,
+        spark, SF_ORACLE, path=str(tmp_path / "hist"),
         docs=DX._history_docs(spark, SF_ORACLE),
     )
     DX.append_minhash_index(spark, SF_ORACLE, grown)
@@ -777,7 +621,7 @@ def test_nkey_delete_respects_last_owner(spark, tmp_path):
         "doc_id long, text string",
     )
     idx = DX.persist_nkey_index(
-        spark, SF_ORACLE, path=str(tmp_path / "nk"), register=False, docs=docs
+        spark, SF_ORACLE, path=str(tmp_path / "nk"), docs=docs
     )
 
     def live():
@@ -810,7 +654,7 @@ def test_nkey_delete_equals_rebuild_minus_tombstones(spark, tmp_path):
 
     d = read_table(spark, SF_ORACLE, "documents")
     idx = DX.persist_nkey_index(
-        spark, SF_ORACLE, path=str(tmp_path / "nk"), register=False
+        spark, SF_ORACLE, path=str(tmp_path / "nk")
     )
     DX.append_nkey_index(spark, SF_ORACLE, idx)
     tomb_docs = d.join(
@@ -840,11 +684,11 @@ def test_catalog_miss_falls_back_to_plain_parquet(spark, tmp_path):
 
     full_docs = read_table(spark, SF_ORACLE, "documents")
     mh = DX.persist_minhash_index(
-        spark, SF_ORACLE, path=str(tmp_path / "mh"), register=False,
+        spark, SF_ORACLE, path=str(tmp_path / "mh"),
         docs=DX._history_docs(spark, SF_ORACLE),
     )
     nk = DX.persist_nkey_index(
-        spark, SF_ORACLE, path=str(tmp_path / "nk"), register=False
+        spark, SF_ORACLE, path=str(tmp_path / "nk")
     )
     tables = [mh.rows.table, nk.ledger.table]
     for table in tables:
@@ -857,7 +701,7 @@ def test_catalog_miss_falls_back_to_plain_parquet(spark, tmp_path):
     mh_full = _frames_sorted(
         spark,
         DX.persist_minhash_index(
-            spark, SF_ORACLE, path=str(tmp_path / "mh_full"), register=False
+            spark, SF_ORACLE, path=str(tmp_path / "mh_full")
         ),
     )
     nk_full = sorted(
@@ -866,7 +710,7 @@ def test_catalog_miss_falls_back_to_plain_parquet(spark, tmp_path):
             spark,
             DX.persist_nkey_index(
                 spark, SF_ORACLE, path=str(tmp_path / "nk_full"),
-                register=False, docs=full_docs,
+                docs=full_docs,
             ),
         ).collect()
     )
@@ -890,13 +734,13 @@ def test_simhash_append_grown_equals_rebuild(spark, tmp_path):
     argument applied to the third index family."""
     grown = DX.persist_simhash_index(
         spark, SF_ORACLE, max_hamming=6, eq_blocks=2,
-        path=str(tmp_path / "g"), register=False,
+        path=str(tmp_path / "g"),
         docs=DX._history_docs(spark, SF_ORACLE).filter("source <> 'src18'"),
     )
     DX.append_simhash_index(spark, SF_ORACLE, grown, batch_source="src18")
     full = DX.persist_simhash_index(
         spark, SF_ORACLE, max_hamming=6, eq_blocks=2,
-        path=str(tmp_path / "f"), register=False,
+        path=str(tmp_path / "f"),
     )
     g = sorted(tuple(r) for r in DX.load_simhash_index(spark, grown).collect())
     f = sorted(tuple(r) for r in DX.load_simhash_index(spark, full).collect())
@@ -917,7 +761,6 @@ def test_simhash_append_query_depends_on_the_append(spark):
         stream_simhash_near_dup,
     )
 
-    DX.clear_dedup_indexes()
     got = sorted(
         tuple(r)
         for r in all_specs()["q_simhash_index_append_matches"]
@@ -958,4 +801,3 @@ def test_simhash_append_query_depends_on_the_append(spark):
         r for r in got if r[0] >= 50_000_000 and r[1] == r[0] - 50_000_000
     ]
     assert clone_hits  # clone ↔ its own original among the appended rows
-    assert DX.simhash_index_for(SF_ORACLE, max_hamming=6, eq_blocks=2) is None

@@ -1,12 +1,15 @@
-"""Guards for the scripts in tools/: every engine or tools name a script
-imports still exists (no JVM needed), and tools/ab.py's end-to-end
-contract and mismatch verdict."""
+"""Guards for the scripts in tools/ and the benchmark harness in
+perfbench/: every engine or tools name a script imports still exists
+and every keyword it passes to an engine function is still accepted
+(no JVM needed), and tools/ab.py's end-to-end contract and mismatch
+verdict."""
 
 from __future__ import annotations
 
 import ast
 import glob
 import importlib
+import inspect
 import json
 import os
 import subprocess
@@ -17,6 +20,8 @@ import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TOOLS = sorted(glob.glob(os.path.join(REPO, "tools", "*.py")))
+PERFBENCH = sorted(glob.glob(os.path.join(REPO, "perfbench", "*.py")))
+ROOTS = ("etl_project_spark", "tools", "tests")
 
 
 def _resolve(module: str, name: str):
@@ -26,14 +31,34 @@ def _resolve(module: str, name: str):
     return importlib.import_module(f"{module}.{name}")
 
 
-@pytest.mark.parametrize("path", TOOLS, ids=os.path.basename)
-def test_tool_imports_resolve(path):
+def _dict_keys(tree: ast.Module) -> dict[str, list[str]]:
+    """Module-level ``NAME = {"kw": ...}`` literals, for ``**NAME``."""
+    out = {}
+    for node in tree.body:
+        if (
+            isinstance(node, ast.Assign)
+            and isinstance(node.value, ast.Dict)
+            and all(isinstance(k, ast.Constant) for k in node.value.keys)
+        ):
+            for target in node.targets:
+                if isinstance(target, ast.Name):
+                    out[target.id] = [k.value for k in node.value.keys]
+    return out
+
+
+def _check_engine_names(path: str) -> None:
+    """Each ``from <root>… import name`` (at any depth) resolves, each
+    ``X.attr`` on a module alias bound that way exists, and each call
+    to a function imported that way passes only keywords its
+    signature accepts (``**NAME`` of a module-level dict literal
+    included)."""
     tree = ast.parse(open(path).read(), filename=path)
     modules: dict[str, types.ModuleType] = {}
+    funcs: dict[str, object] = {}
     for node in ast.walk(tree):
         if not isinstance(node, ast.ImportFrom) or not node.module:
             continue
-        if node.module.split(".")[0] not in ("etl_project_spark", "tools"):
+        if node.module.split(".")[0] not in ROOTS:
             continue
         for alias in node.names:
             try:
@@ -42,6 +67,9 @@ def test_tool_imports_resolve(path):
                 pytest.fail(f"line {node.lineno}: {node.module}.{alias.name} is gone")
             if isinstance(obj, types.ModuleType):
                 modules[alias.asname or alias.name] = obj
+            elif inspect.isfunction(obj):
+                funcs[alias.asname or alias.name] = obj
+    kwargs = _dict_keys(tree)
     for node in ast.walk(tree):
         if (
             isinstance(node, ast.Attribute)
@@ -51,6 +79,41 @@ def test_tool_imports_resolve(path):
             assert hasattr(modules[node.value.id], node.attr), (
                 f"line {node.lineno}: {node.value.id}.{node.attr} is gone"
             )
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        if isinstance(f, ast.Name) and f.id in funcs:
+            fn = funcs[f.id]
+        elif (
+            isinstance(f, ast.Attribute)
+            and isinstance(f.value, ast.Name)
+            and f.value.id in modules
+            and inspect.isfunction(getattr(modules[f.value.id], f.attr, None))
+        ):
+            fn = getattr(modules[f.value.id], f.attr)
+        else:
+            continue
+        params = inspect.signature(fn).parameters
+        if any(p.kind is p.VAR_KEYWORD for p in params.values()):
+            continue
+        passed = [kw.arg for kw in node.keywords if kw.arg]
+        for kw in node.keywords:
+            if kw.arg is None and isinstance(kw.value, ast.Name):
+                passed += kwargs.get(kw.value.id, [])
+        missing = [k for k in passed if k not in params]
+        assert not missing, (
+            f"line {node.lineno}: {fn.__name__} no longer takes {missing}"
+        )
+
+
+@pytest.mark.parametrize("path", TOOLS, ids=os.path.basename)
+def test_tool_imports_resolve(path):
+    _check_engine_names(path)
+
+
+@pytest.mark.parametrize("path", PERFBENCH, ids=os.path.basename)
+def test_perfbench_engine_calls_resolve(path):
+    _check_engine_names(path)
 
 
 def test_frame_digest_agrees_with_frames_match():

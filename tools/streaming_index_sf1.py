@@ -55,7 +55,7 @@ def main() -> int:
         t0 = time.perf_counter()
         hist = DX.persist_minhash_index(
             spark, sf_dir, path=os.path.join(work, "hist_stream"),
-            register=False, docs=DX._history_docs(spark, sf_dir),
+            docs=DX._history_docs(spark, sf_dir),
         )
         build_s = round(time.perf_counter() - t0, 1)
         # bit-identical starting point for the batch twin: copy the dirs
@@ -108,7 +108,6 @@ def main() -> int:
         return 1
     finally:
         shutil.rmtree(work, ignore_errors=True)
-        DX.clear_dedup_indexes()
         spark.stop()
 
 
